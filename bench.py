@@ -36,12 +36,15 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def prelude(app_name: str, wanted) -> tuple:
+    """Set-up shared by bench.py, bench_profile.py and plans_capture.py:
+    session at $SPARK_GRAFT_SF_DIR, 8m splits, warm-up, then the
+    PREPARES of the ``wanted`` query names. Returns (spark, sf_dir)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from hubsit_health_analytics_etl_spark.session import get_spark
     from hubsit_health_analytics_etl_spark.workload import PREPARES, QUERIES
 
-    spark = get_spark(app_name="hubsit-bench")
+    spark = get_spark(app_name=app_name)
     spark.sparkContext.setLogLevel("ERROR")
     # The sf0.1 fixtures are single-digit-MB parquet files: at the
     # default 128m split size every scan lands on 1-3 tasks and the
@@ -65,9 +68,15 @@ def main() -> None:
     # write-time cost is a once-per-ingest expense (the end-to-end
     # write+probe contract queries still time the full round-trip)
     for name in QUERIES:
-        if name in PREPARES:
+        if name in PREPARES and name in wanted:
             PREPARES[name](spark, sf_dir)
+    return spark, sf_dir
 
+
+def main() -> None:
+    from hubsit_health_analytics_etl_spark.workload import QUERIES
+
+    spark, sf_dir = prelude("hubsit-bench", QUERIES)
     warm_runs = int(os.environ.get("SPARK_GRAFT_WARM_RUNS", "0"))
     timings: dict[str, float] = {}
     for _ in range(warm_runs + 1):

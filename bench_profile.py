@@ -1,18 +1,18 @@
 """Per-query profiling harness for the optimization rounds.
 
-Same methodology as bench.py (noop sink, PREPARES outside the timed
-loop, $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS) but additionally records
-per query: Spark job count, stage count, task count, and shuffle
-write/read bytes via a JVM SparkListener — the instrument that
-separates scheduling-latency-bound queries (many tiny jobs/stages)
-from genuinely compute/shuffle-bound ones (guide §1.1/§7.1, which we
-cannot do through the UI because spark.ui.enabled=false here).
+Same methodology as bench.py (its ``prelude``, noop sink, PREPARES
+outside the timed loop, $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS) but
+additionally records per query: Spark job count, stage count and task
+count via the status tracker — the instrument that separates
+scheduling-latency-bound queries (many tiny jobs/stages) from
+genuinely compute/shuffle-bound ones (guide §1.1/§7.1, which we cannot
+do through the UI because spark.ui.enabled=false here).
 
 Usage:
     python bench_profile.py [--queries name1,name2] [--out path.json]
 
-Writes a JSON mapping name -> {sec, jobs, stages, tasks,
-shuffle_write_mb, shuffle_read_mb} to bench_evidence/profile_grid.json
+Writes a JSON mapping name -> {sec, jobs, stages, tasks} to
+bench_evidence/profile_grid.json
 (or --out). Not part of the driver contract; bench.py remains the
 bench of record.
 """
@@ -34,25 +34,11 @@ def main() -> None:
     ap.add_argument("--out", default="bench_evidence/profile_grid.json")
     args = ap.parse_args()
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from hubsit_health_analytics_etl_spark.session import get_spark
-    from hubsit_health_analytics_etl_spark.workload import PREPARES, QUERIES
-
-    spark = get_spark(app_name="hubsit-profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-
-    QUERIES["daily_status"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).count()
+    from bench import prelude
+    from hubsit_health_analytics_etl_spark.workload import QUERIES
 
     wanted = [q for q in args.queries.split(",") if q] or list(QUERIES)
-    for name in QUERIES:
-        if name in PREPARES and name in wanted:
-            PREPARES[name](spark, sf_dir)
+    spark, sf_dir = prelude("hubsit-profile", wanted)
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()

@@ -201,7 +201,9 @@ def invariants(spark, sf_dir: str) -> dict:
         minhash_candidates,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import JACCARD_THRESHOLD
+    from hubsit_health_analytics_etl_spark.workloads._shared import (
+        JACCARD_THRESHOLD,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()

@@ -13,7 +13,7 @@ SQL query, so the workload registration is rows-only; correctness is
 pinned by unit tests on crafted graphs. At scale: each iteration is a
 self-join + groupBy min on (node, label) — shuffle on node ids; use
 checkpointing every few iterations to truncate lineage (done here via
-localCheckpoint when available).
+localCheckpoint, or reliable checkpoint given ``checkpoint_dir``).
 """
 
 from __future__ import annotations
@@ -73,17 +73,12 @@ def connected_components(
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
 
-    def _materialize(df: DataFrame) -> "tuple[DataFrame, bool]":
-        """(materialized frame, did an eager action run). The boolean
-        lets the convergence probe ride the materialization's own job
-        via Observation; the cache() fallback runs no action, so its
-        caller must probe explicitly."""
+    def _materialize(df: DataFrame) -> DataFrame:
+        """Eager checkpoint: runs one job, which the convergence probe
+        rides via Observation."""
         if checkpoint_dir is not None:
-            return df.checkpoint(eager=True), True
-        try:
-            return df.localCheckpoint(eager=True), True
-        except Exception:
-            return df.cache(), False
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=True)
 
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -93,7 +88,7 @@ def connected_components(
     # materialize once: every iteration joins edges — without this the
     # upstream pair-generation pipeline (e.g. the full MinHash LSH) is
     # re-executed per iteration
-    edges, _ = _materialize(edges)
+    edges = _materialize(edges)
     # label starts as min neighbor (including self)
     labels = (
         edges.groupBy("u")
@@ -142,19 +137,15 @@ def connected_components(
         # the convergence probe RIDES the materialization job as an
         # Observation metric (one driver-sequenced action per round
         # instead of two — the checkpoint's count and a second
-        # cached-scan job used to run back-to-back); the cache()
-        # fallback runs no action, so it keeps the explicit probe
+        # cached-scan job used to run back-to-back)
         from pyspark.sql import Observation
 
         obs = Observation()
         new_labels = new_labels.observe(
             obs, F.sum(F.col("_changed").cast("long")).alias("n_changed")
         )
-        new_labels, eager = _materialize(new_labels)
-        if eager:
-            changed = int(obs.get["n_changed"] or 0)
-        else:
-            changed = new_labels.filter(F.col("_changed")).limit(1).count()
+        new_labels = _materialize(new_labels)
+        changed = int(obs.get["n_changed"] or 0)
         labels = new_labels.select("node", "comp")
         if changed == 0:
             if stats is not None:

@@ -21,9 +21,10 @@ them sequentially. Two latency sources motivate this module:
 a small thread pool so their jobs overlap: as one job's tail drains,
 the next job's tasks back-fill the freed cores, and the driver-side
 planning of one branch hides under the execution of another. Job
-group / description thread-locals are inherited via
-``inheritable_thread_target`` so UI labels and per-group job
-accounting (bench_profile.py) stay correct.
+group / description thread-locals and session tags are inherited via
+``inheritable_thread_target(session)`` — also by waves nested inside
+a wave thread — so UI labels and per-group job accounting
+(bench_profile.py) stay correct.
 
 Semantics are UNCHANGED by construction: every frame/thunk is
 independent of its wave-mates (callers assert that by choosing the
@@ -51,13 +52,10 @@ MAX_WAVE_POOL = 8
 
 def _inherit(fn: Callable[..., T]) -> Callable[..., T]:
     """Wrap ``fn`` so the child thread inherits the caller's JVM-local
-    properties AND session tags (the session form of
-    ``inheritable_thread_target``; the bare-callable form inherits
-    properties only and warns about tags on every call)."""
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        return inheritable_thread_target(spark)(fn)
-    return inheritable_thread_target(fn)
+    properties AND session tags. ``active()`` falls back to the default
+    session on a pool thread, where no session is active, so nested
+    waves keep the tags too."""
+    return inheritable_thread_target(SparkSession.active())(fn)
 
 
 def ckpt_wave(*dfs: DataFrame) -> tuple[DataFrame, ...]:

@@ -62,10 +62,6 @@ def norm_expr(a: str) -> Column:
     )
 
 
-def cosine_expr(a: str, b: str) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def _plane_literal(plane: list[float]) -> str:
     return "array(" + ", ".join(f"cast({x} as double)" for x in plane) + ")"
 

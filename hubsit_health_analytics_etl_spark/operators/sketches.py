@@ -320,7 +320,7 @@ def cms_estimate(
 # ---------------------------------------------------------------------------
 # Per-key sufficient-statistics ("moments") index: (key, n, Σx, Σx²)
 # over u2 fixed-point integer values — the mergeable state behind the
-# integer z-score detector (workload_ext.q_user_value_outliers) and
+# integer z-score detector (w11_warehouse_ops.q_user_value_outliers) and
 # the streaming moments_sink. Triples over disjoint slices ADD, so the
 # index follows the CMS/histogram laws exactly: merge = union +
 # sum-groupBy, forget = negate + sum (exact integer algebra — the

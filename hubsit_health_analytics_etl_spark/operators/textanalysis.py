@@ -899,7 +899,7 @@ def bpe_apply_merges(cur, merges) -> "object":
 #   score(q, d) = Σ_{t ∈ q} ln(1 + (N - df_t + 0.5) / (df_t + 0.5))
 #                 · tf_td·(k1+1) / (tf_td + k1·(1 - b + b·dl_d/avgdl))
 # The pandas reference has no search surface; this extends the
-# tf·idf operator (workload_ext.py::q_doc_tfidf_top_terms) with the
+# tf·idf operator (w11_warehouse_ops.py::q_doc_tfidf_top_terms) with the
 # saturating tf and length normalization real retrieval uses.
 # ---------------------------------------------------------------------------
 BM25_K1 = 1.2

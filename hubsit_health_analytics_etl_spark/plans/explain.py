@@ -26,30 +26,15 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
 
 
-def has_shuffle_join(df: DataFrame) -> bool:
-    p = physical_plan(df)
-    return "SortMergeJoin" in p or "ShuffledHashJoin" in p
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters entries of every scan in the plan."""
     return re.findall(r"PushedFilters: \[([^\]]*)\]", physical_plan(df))
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    """ReadSchema of every scan — the column-pruning witness."""
-    return re.findall(r"ReadSchema: (\S+)", physical_plan(df))
 
 
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges (excludes broadcast exchanges)."""
     p = physical_plan(df)
     return len(re.findall(r"\n\(\d+\) Exchange", p))
-
-
-def codegen_stages(df: DataFrame) -> int:
-    """WholeStageCodegen span count (smaller = wider fused stages)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", df._jdf.queryExecution().executedPlan().toString())))
 
 
 def assert_plan(

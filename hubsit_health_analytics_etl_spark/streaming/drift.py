@@ -17,8 +17,8 @@ The reference bounds/histogram are LITERALS frozen at deployment
 re-aggregate history, and a drift monitor must not let the reference
 drift along with the data it is judging.
 
-Determinism (shared with workload_ext.q_user_value_drift_psi): the
-PSI fold runs over a SORTED bin array (an unordered float SUM would
+Determinism (shared with w12_retrieval_sketches.q_user_value_drift_psi):
+the PSI fold runs over a SORTED bin array (an unordered float SUM would
 not survive a cross-engine hash), bins empty on BOTH sides contribute
 one closed-form Laplace term COUNTED rather than materialized, and
 smoothing keeps every ln() argument an exact integer ratio.

@@ -1,6 +1,6 @@
 """Streaming Markov transition counter via applyInPandasWithState —
 the streaming twin of the batch transition matrix
-(workload_ext.event_markov_transitions) and its index lifecycle
+(w16_behavioral_stats.q_event_markov_transitions) and its index lifecycle
 (markov_new_batch / markov_forget).
 
 The state the batch affected-key rebuild cannot avoid is exactly what

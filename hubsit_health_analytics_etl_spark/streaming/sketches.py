@@ -1,5 +1,5 @@
 """Streaming count-min sketch maintenance — the live-ingest twin of
-the batch ``cms_new_batch`` query (workload_ext.py): every arriving
+the batch ``cms_new_batch`` query (w12_retrieval_sketches.py): every arriving
 micro-batch is reduced to its own depth×width counter grid and written
 as one index subdirectory; the live sketch is the cell-wise SUM over
 all batch grids, exact because count-min grids are elementwise-additive
@@ -117,7 +117,7 @@ def moments_sink(
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` callable maintaining the per-key sufficient-
     statistics index (n, Σx, Σx²) behind the integer z-score detector
-    (workload_ext.q_user_value_outliers): values become exact u2
+    (w11_warehouse_ops.q_user_value_outliers): values become exact u2
     fixed-point integers and each micro-batch reduces to one triple
     per key it touched — per-batch state ∝ batch's distinct keys,
     triples ADD across batches (the moments member of this sink

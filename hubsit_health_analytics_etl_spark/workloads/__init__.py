@@ -1,4 +1,6 @@
-"""Per-family EXT workload modules (split from workload_ext.py).
+"""Per-family EXT workload modules. Import names from the defining
+family module (e.g. ``workloads.w11_warehouse_ops``); monkeypatch
+there too.
 
 IMPORT ORDER IS THE REGISTRY ORDER — the ``@query`` decorator appends
 to ``workload.QUERIES``/``ORACLES`` at import time, and the driver
@@ -6,29 +8,25 @@ rotation breaks last-checked ties by registration position. Keep new
 modules at the END.
 """
 
-from .w01_windows_text import *  # noqa: F401,F403,E402
-from .w02_dedup import *  # noqa: F401,F403,E402
-from .w03_similarity_multimodal import *  # noqa: F401,F403,E402
-from .w04_relational import *  # noqa: F401,F403,E402
-from .w05_clusters_ann import *  # noqa: F401,F403,E402
-from .w06_joins_chunking import *  # noqa: F401,F403,E402
-from .w07_cluster_maintenance import *  # noqa: F401,F403,E402
-from .w08_ann_composites import *  # noqa: F401,F403,E402
-from .w09_curation_lifecycle import *  # noqa: F401,F403,E402
-from .w10_dataset_build import *  # noqa: F401,F403,E402
-from .w11_warehouse_ops import *  # noqa: F401,F403,E402
-from .w12_retrieval_sketches import *  # noqa: F401,F403,E402
-from .w13_index_lifecycle import *  # noqa: F401,F403,E402
-from .w14_graph import *  # noqa: F401,F403,E402
-from .w15_linkage_dsir import *  # noqa: F401,F403,E402
-from .w16_behavioral_stats import *  # noqa: F401,F403,E402
-from .w17_quality_calendar import *  # noqa: F401,F403,E402
-from .w18_dataset_increment import *  # noqa: F401,F403,E402
-from .w19_incremental_dims import *  # noqa: F401,F403,E402
-from .w20_sequential_monitors import *  # noqa: F401,F403,E402
-
-from . import w01_windows_text, w02_dedup, w03_similarity_multimodal, w04_relational, w05_clusters_ann, w06_joins_chunking, w07_cluster_maintenance, w08_ann_composites, w09_curation_lifecycle, w10_dataset_build, w11_warehouse_ops, w12_retrieval_sketches, w13_index_lifecycle, w14_graph, w15_linkage_dsir, w16_behavioral_stats, w17_quality_calendar, w18_dataset_increment, w19_incremental_dims, w20_sequential_monitors  # noqa: E402,F401
-
-# ordered module objects — the workload_ext facade resolves attribute
-# lookups (incl. underscore helpers) against these at access time
-FAMILY_MODULES = [w01_windows_text, w02_dedup, w03_similarity_multimodal, w04_relational, w05_clusters_ann, w06_joins_chunking, w07_cluster_maintenance, w08_ann_composites, w09_curation_lifecycle, w10_dataset_build, w11_warehouse_ops, w12_retrieval_sketches, w13_index_lifecycle, w14_graph, w15_linkage_dsir, w16_behavioral_stats, w17_quality_calendar, w18_dataset_increment, w19_incremental_dims, w20_sequential_monitors]
+from . import (  # noqa: F401
+    w01_windows_text,
+    w02_dedup,
+    w03_similarity_multimodal,
+    w04_relational,
+    w05_clusters_ann,
+    w06_joins_chunking,
+    w07_cluster_maintenance,
+    w08_ann_composites,
+    w09_curation_lifecycle,
+    w10_dataset_build,
+    w11_warehouse_ops,
+    w12_retrieval_sketches,
+    w13_index_lifecycle,
+    w14_graph,
+    w15_linkage_dsir,
+    w16_behavioral_stats,
+    w17_quality_calendar,
+    w18_dataset_increment,
+    w19_incremental_dims,
+    w20_sequential_monitors,
+)

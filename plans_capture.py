@@ -3,9 +3,10 @@
 Usage:
     python plans_capture.py --suffix before [--queries a,b,c]
 
-Writes plans/r17/<query>_<suffix>.txt. PREPARES run first so standing
-indexes exist; query bodies that probe sizes at build time execute
-their probe jobs, which is fine — we only need the final plan text.
+Writes plans/r17/<query>_<suffix>.txt. bench.py's ``prelude`` runs the
+PREPARES first so standing indexes exist; query bodies that probe
+sizes at build time execute their probe jobs, which is fine — we only
+need the final plan text.
 """
 
 from __future__ import annotations
@@ -24,18 +25,11 @@ def main() -> None:
     ap.add_argument("--outdir", default="plans/r17")
     args = ap.parse_args()
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from hubsit_health_analytics_etl_spark.session import get_spark
-    from hubsit_health_analytics_etl_spark.workload import PREPARES, QUERIES
-
-    spark = get_spark(app_name="hubsit-plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+    from bench import prelude
+    from hubsit_health_analytics_etl_spark.workload import QUERIES
 
     wanted = [q for q in args.queries.split(",") if q] or list(QUERIES)
-    for name in QUERIES:
-        if name in PREPARES and name in wanted:
-            PREPARES[name](spark, sf_dir)
+    spark, sf_dir = prelude("hubsit-plans", wanted)
 
     os.makedirs(args.outdir, exist_ok=True)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

@@ -913,7 +913,9 @@ def test_token_pack_bins_respect_budget(spark):
     offsets share one budget window: bin token sum ≤ budget + the
     bin's largest doc (the straggler that crosses the boundary)."""
     from hubsit_health_analytics_etl_spark.workload import QUERIES
-    from hubsit_health_analytics_etl_spark.workload_ext import PACK_BUDGET
+    from hubsit_health_analytics_etl_spark.workloads.w06_joins_chunking import (
+        PACK_BUDGET,
+    )
 
     out = QUERIES["token_pack_bins"](spark, SF_SMOKE)
     agg = (
@@ -994,7 +996,9 @@ def test_pq_trained_codebooks_beat_label_mean(spark):
         pq_encode_exprs,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import PQ_TRAINED_K
+    from hubsit_health_analytics_etl_spark.workloads.w08_ann_composites import (
+        PQ_TRAINED_K,
+    )
 
     from .conftest import SF_SMOKE
 
@@ -1088,7 +1092,9 @@ def test_embedding_pca_reduce_finds_optimal_subspace(spark):
         pca_project_expr,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import PCA_K
+    from hubsit_health_analytics_etl_spark.workloads.w12_retrieval_sketches import (
+        PCA_K,
+    )
 
     embdf = load_table(spark, SF_SMOKE, "embeddings")
     pc = pca_components(embdf, PCA_K)
@@ -1161,7 +1167,9 @@ def test_event_funnel_tie_and_deadline_semantics(spark, tmp_path):
     import datetime
 
     from hubsit_health_analytics_etl_spark import workload as w
-    from hubsit_health_analytics_etl_spark.workload_ext import FUNNEL_WINDOW_MIN
+    from hubsit_health_analytics_etl_spark.workloads.w10_dataset_build import (
+        FUNNEL_WINDOW_MIN,
+    )
 
     t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
 
@@ -1230,8 +1238,10 @@ def test_opq_stack_quality_bounds(spark):
         project_u6_expr,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads._shared import (
         ANN_QUERY_LIMIT,
+    )
+    from hubsit_health_analytics_etl_spark.workloads.w12_retrieval_sketches import (
         _rot_pq_topk,
     )
 
@@ -1314,7 +1324,7 @@ def test_rot_pq_adc_matches_independent_integer_replica(spark):
         hadamard_rotation,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads._shared import (
         ANN_K,
         ANN_QUERY_LIMIT,
     )
@@ -1551,9 +1561,8 @@ def test_user_value_drift_ks_per_key_guard(spark):
     import pandas as pd
     import pytest as _pytest
 
-    # patch the DEFINING family module (workload_ext is a re-export
-    # facade since the workloads/ split — its copy of the name is not
-    # the one the kernel closure reads)
+    # patch the defining family module: the kernel closure reads the
+    # name from there
     import hubsit_health_analytics_etl_spark.workloads.w11_warehouse_ops as wmod
 
     old = wmod.DRIFT_KS_MAX_ROWS_PER_KEY
@@ -2109,9 +2118,11 @@ def test_phrase_search_finds_crafted_positions(spark):
     )
     import pyspark.sql.functions as F
 
-    import hubsit_health_analytics_etl_spark.workload_ext as wx
     from hubsit_health_analytics_etl_spark.operators.textanalysis import (
         _doc_grams,
+    )
+    from hubsit_health_analytics_etl_spark.workloads.w12_retrieval_sketches import (
+        PHRASE_LEN,
     )
 
     phrases = spark.createDataFrame(
@@ -2120,7 +2131,7 @@ def test_phrase_search_finds_crafted_positions(spark):
     ).select("phrase_id", F.md5(F.lower("phrase")).alias("gh"))
     got = {
         (r.phrase_id, r.doc_id): (r.n_hits, r.first_pos)
-        for r in _doc_grams(docs, wx.PHRASE_LEN)
+        for r in _doc_grams(docs, PHRASE_LEN)
         .join(F.broadcast(phrases), "gh")
         .groupBy("phrase_id", "doc_id")
         .agg(
@@ -2216,8 +2227,10 @@ def test_token_pmi_matches_python_reference_on_crafted_corpus(spark):
     import math
     from collections import Counter
 
-    import hubsit_health_analytics_etl_spark.workload_ext as wx
     from hubsit_health_analytics_etl_spark.workload import QUERIES
+    from hubsit_health_analytics_etl_spark.workloads.w13_index_lifecycle import (
+        PMI_MIN_COUNT,
+    )
 
     texts = [
         (0, "new york is big and the city of new york is loud"),
@@ -2235,7 +2248,7 @@ def test_token_pmi_matches_python_reference_on_crafted_corpus(spark):
     n_tok, n_bg = float(sum(uni.values())), float(sum(bi.values()))
     expected = {}
     for (a, b), c in bi.items():
-        if c >= wx.PMI_MIN_COUNT:
+        if c >= PMI_MIN_COUNT:
             pmi = math.log((c * (n_tok * n_tok)) / (n_bg * (uni[a] * uni[b])))
             expected[(a, b)] = (c, math.floor(pmi * 1000000.0))
 
@@ -2270,7 +2283,7 @@ def test_token_pmi_matches_python_reference_on_crafted_corpus(spark):
         F.broadcast(bg.agg(F.count(F.lit(1)).cast("double").alias("n_bg")))
     )
     s = (
-        cab.filter(F.col("c_ab") >= wx.PMI_MIN_COUNT)
+        cab.filter(F.col("c_ab") >= PMI_MIN_COUNT)
         .join(cu.withColumnRenamed("w", "a").withColumnRenamed("c_w", "c_a"), "a")
         .join(cu.withColumnRenamed("w", "b").withColumnRenamed("c_w", "c_b"), "b")
         .crossJoin(F.broadcast(n))
@@ -2558,7 +2571,6 @@ def test_weekly_cohort_retention_matches_python_model(spark, monkeypatch):
 
     import duckdb
 
-    import hubsit_health_analytics_etl_spark.workload_ext as wx
     from hubsit_health_analytics_etl_spark.workload import ORACLES
 
     rows = [
@@ -2599,14 +2611,14 @@ def test_weekly_cohort_retention_matches_python_model(spark, monkeypatch):
         for (c, off), us in cells.items()
     )
 
-    # Spark side on the crafted frame (loader stubbed on the DEFINING
-    # family module — workload_ext is a re-export facade post-split)
+    # Spark side on the crafted frame (loader stubbed on the defining
+    # family module)
     import hubsit_health_analytics_etl_spark.workloads.w11_warehouse_ops as w11
 
     monkeypatch.setattr(w11, "load_table", lambda s, d, n, **kw: df)
     got_spark = sorted(
         (r.cohort_week, r.offset_weeks, r.n_users, r.cohort_size, r.rate_ppm)
-        for r in wx.q_weekly_cohort_retention(spark, "unused").collect()
+        for r in w11.q_weekly_cohort_retention(spark, "unused").collect()
     )
     assert got_spark == want
 
@@ -2627,8 +2639,6 @@ def test_user_value_outliers_match_float_zscore_model(spark, monkeypatch):
     the same events."""
     import statistics
 
-    import hubsit_health_analytics_etl_spark.workload_ext as wx
-
     per_user = {
         1: [10.0] * 20 + [500.0],          # one wild outlier
         2: [50.0] * 8,                      # zero variance
@@ -2645,7 +2655,7 @@ def test_user_value_outliers_match_float_zscore_model(spark, monkeypatch):
     monkeypatch.setattr(w11, "load_table", lambda s, d, n, **kw: df)
     got = {
         r.user_id: (r.n_events, r.mean_u2, r.n_outliers)
-        for r in wx.q_user_value_outliers(spark, "unused").collect()
+        for r in w11.q_user_value_outliers(spark, "unused").collect()
     }
 
     for u, vs in per_user.items():
@@ -3237,7 +3247,7 @@ def test_waterfill_matches_pure_python_and_sums_to_budget(spark):
     EXACTLY to the budget when total > budget (the remainder spread
     guarantees it), and no source is ever allocated more than it has."""
     from hubsit_health_analytics_etl_spark.workload import QUERIES
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads.w14_graph import (
         WATERFILL_BUDGET_PCT,
     )
 
@@ -3426,11 +3436,15 @@ def test_ndcg_matches_pure_python_and_bounds(spark):
     10⁶ exactly when it reproduces the exact top-k order."""
     import math
 
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads.w03_similarity_multimodal import (
         q_ann_bruteforce_topk,
+        q_ann_lsh_topk,
+    )
+    from hubsit_health_analytics_etl_spark.workloads.w05_clusters_ann import (
         q_ann_ivf_nprobe_topk,
         q_ann_ivf_topk,
-        q_ann_lsh_topk,
+    )
+    from hubsit_health_analytics_etl_spark.workloads.w15_linkage_dsir import (
         q_retrieval_ndcg_at_k,
     )
 
@@ -3582,8 +3596,10 @@ def test_contrastive_pairs_selection_logic(spark):
         brute_force_topk,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads._shared import (
         ANN_QUERY_LIMIT,
+    )
+    from hubsit_health_analytics_etl_spark.workloads.w15_linkage_dsir import (
         CONTRASTIVE_NEG,
         CONTRASTIVE_POOL,
         q_contrastive_training_pairs,
@@ -3622,7 +3638,7 @@ def test_epoch_shuffle_plan_is_a_fresh_permutation_per_epoch(spark):
     per epoch; positions within each (epoch, shard) are contiguous
     1..n; epochs are DIFFERENT permutations; and the plan reproduces
     bit-identically on re-execution (the rand() failure mode)."""
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads.w15_linkage_dsir import (
         SHUFFLE_EPOCHS,
         SHUFFLE_SHARDS,
         q_epoch_shuffle_plan,
@@ -3667,7 +3683,7 @@ def test_quality_feature_iv_matches_pure_python_reference(spark):
         quality_score,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads.w15_linkage_dsir import (
         IV_BUCKETS,
         q_quality_feature_iv,
     )
@@ -3845,7 +3861,7 @@ def test_km_survival_matches_pure_python_and_censoring_is_nonvacuous(spark):
 
     from hubsit_health_analytics_etl_spark import workload as w
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads.w16_behavioral_stats import (
         KM_CENSOR_WEEK,
         KM_HORIZON_DAYS,
     )
@@ -4363,8 +4379,10 @@ def test_bellman_ford_matches_pure_python_reference(spark):
 
     from hubsit_health_analytics_etl_spark import workload as w
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads.w16_behavioral_stats import (
         BF_MAX_ROUNDS,
+    )
+    from hubsit_health_analytics_etl_spark.workloads.w14_graph import (
         PPR_SEEDS,
         TRI_MIN_SUPPORT,
     )
@@ -4428,7 +4446,7 @@ def test_markov_maintenance_splices_neighbors_on_delete(spark):
     survive maintenance bit-identically."""
     import datetime as dt
 
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads.w17_quality_calendar import (
         _markov_counts,
         _markov_maintain,
     )
@@ -4471,7 +4489,9 @@ def test_zipf_fit_matches_pure_python_reference(spark):
 
     from hubsit_health_analytics_etl_spark import workload as w
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import ZIPF_TOP_R
+    from hubsit_health_analytics_etl_spark.workloads.w17_quality_calendar import (
+        ZIPF_TOP_R,
+    )
 
     cnt = Counter()
     for r in load_table(spark, SF_SMOKE, "documents").select("text").collect():
@@ -4779,7 +4799,9 @@ def test_pack_utilization_consistent_with_pack_bins(spark):
     from collections import defaultdict
 
     from hubsit_health_analytics_etl_spark import workload as w
-    from hubsit_health_analytics_etl_spark.workload_ext import PACK_BUDGET
+    from hubsit_health_analytics_etl_spark.workloads.w06_joins_chunking import (
+        PACK_BUDGET,
+    )
 
     bins = defaultdict(lambda: defaultdict(lambda: [0, 0]))
     for r in w.QUERIES["token_pack_bins"](spark, SF_SMOKE).collect():
@@ -4844,7 +4866,9 @@ def test_boilerplate_fraction_matches_pure_python_reference(spark):
 
     from hubsit_health_analytics_etl_spark import workload as w
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import BP_MIN_DF
+    from hubsit_health_analytics_etl_spark.workloads.w17_quality_calendar import (
+        BP_MIN_DF,
+    )
 
     def shingles(text):
         toks = text.lower().split(" ")
@@ -4883,7 +4907,9 @@ def test_funnel_latency_matches_pure_python_reference(spark):
 
     from hubsit_health_analytics_etl_spark import workload as w
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import FUNNEL_WINDOW_MIN
+    from hubsit_health_analytics_etl_spark.workloads.w10_dataset_build import (
+        FUNNEL_WINDOW_MIN,
+    )
 
     by_user = defaultdict(list)
     for r in load_table(spark, SF_SMOKE, "events").select(
@@ -5043,7 +5069,9 @@ def test_assortativity_matches_pure_python_reference(spark):
 
     from hubsit_health_analytics_etl_spark import workload as w
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import TRI_MIN_SUPPORT
+    from hubsit_health_analytics_etl_spark.workloads.w14_graph import (
+        TRI_MIN_SUPPORT,
+    )
 
     op = {
         (r["l_orderkey"], r["l_partkey"])

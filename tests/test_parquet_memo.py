@@ -58,3 +58,48 @@ def test_memo_cap_evicts_foreign_sessions_first(spark):
     finally:
         for k in [k for k in pq._PLAN_MEMO if k[0] == "dead-app"]:
             del pq._PLAN_MEMO[k]
+
+
+def test_concurrent_hits_over_cap_evict_without_error(spark):
+    """Wave threads share the memo: concurrent hits that each find it
+    over the cap must evict the dead session once between them — no
+    KeyError from a double delete, no 'dictionary changed size' from
+    iterating during another thread's eviction."""
+    import sys
+    import threading
+
+    from hubsit_health_analytics_etl_spark.sources import parquet as pq
+
+    paths = [f"{SF_SMOKE}/{t}.parquet" for t in ("region", "nation")]
+    live = {p: pq.read_parquet_immutable(spark, p) for p in paths}
+    errors, hits = [], []
+
+    def worker(i):
+        try:
+            for _ in range(50):
+                p = paths[i % 2]
+                hits.append(pq.read_parquet_immutable(spark, p) is live[p])
+        except Exception as e:  # collected for the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(3):
+            for i in range(pq._PLAN_MEMO_CAP + 1):
+                pq._PLAN_MEMO[("dead-app", f"/nope/{i}")] = (None, None)
+            threads = [
+                threading.Thread(target=worker, args=(i,)) for i in range(16)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+            assert not any(t.is_alive() for t in threads)
+            assert not any(k[0] == "dead-app" for k in pq._PLAN_MEMO)
+    finally:
+        sys.setswitchinterval(old)
+        for k in [k for k in pq._PLAN_MEMO if k[0] == "dead-app"]:
+            del pq._PLAN_MEMO[k]
+    assert errors == []
+    assert len(hits) == 3 * 16 * 50 and all(hits)

@@ -205,7 +205,9 @@ def test_embedding_nn_dedup_block_key_cardinality_scales(spark):
         lsh_bucket_expr,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import NN_DEDUP_PLANES
+    from hubsit_health_analytics_etl_spark.workloads.w03_similarity_multimodal import (
+        NN_DEDUP_PLANES,
+    )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
 
@@ -550,8 +552,10 @@ def test_rerank_udf_python_stage_bounded_to_candidates(spark):
     pair space."""
     from hubsit_health_analytics_etl_spark.plans.explain import physical_plan
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads._shared import (
         ANN_QUERY_LIMIT,
+    )
+    from hubsit_health_analytics_etl_spark.workloads.w08_ann_composites import (
         RERANK_CANDIDATES,
         _two_stage_rerank,
     )
@@ -1357,10 +1361,12 @@ def test_llm_dataset_build_bounded_corpus_rescans(spark):
     no global sort — the pack/shard windows partition per shard."""
     import re
 
-    from hubsit_health_analytics_etl_spark import workload_ext as wx
     from hubsit_health_analytics_etl_spark.plans.explain import physical_plan
+    from hubsit_health_analytics_etl_spark.workloads.w10_dataset_build import (
+        _llm_dataset_plan,
+    )
 
-    p = physical_plan(wx._llm_dataset_plan(spark, SF_SMOKE))
+    p = physical_plan(_llm_dataset_plan(spark, SF_SMOKE))
     assert p.count("documents.parquet") == 1, p.count("documents.parquet")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
@@ -1484,7 +1490,7 @@ def test_versioned_bloom_read_query_scans_fewer_files(spark):
         read_version,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads.w02_dedup import (
         _run_scoped_index_dir,
     )
 

@@ -90,7 +90,9 @@ def test_doc_quality_calibration_reliability_invariants(spark):
     where its absolute calibration is off — which gap_u6 quantifies)."""
     from hubsit_health_analytics_etl_spark import workload as w
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import CALIB_BINS
+    from hubsit_health_analytics_etl_spark.workloads.w09_curation_lifecycle import (
+        CALIB_BINS,
+    )
 
     rows = sorted(
         w.QUERIES["doc_quality_calibration"](spark, SF_SMOKE).collect(),

@@ -168,9 +168,11 @@ def test_kmeans_ivf_recall_matches_numpy_replica(spark):
         kmeans_centroids,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads._shared import (
         ANN_K,
         ANN_QUERY_LIMIT,
+    )
+    from hubsit_health_analytics_etl_spark.workloads.w05_clusters_ann import (
         KMEANS_IVF_CELLS,
     )
 
@@ -235,9 +237,11 @@ def test_pq_trained_recall_matches_numpy_replica(spark):
         pq_codebooks_kmeans,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads._shared import (
         ANN_K,
         ANN_QUERY_LIMIT,
+    )
+    from hubsit_health_analytics_etl_spark.workloads.w08_ann_composites import (
         PQ_TRAINED_K,
     )
 
@@ -316,7 +320,7 @@ def test_opq_adc_matches_independent_integer_replica(spark):
         pca_components,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads._shared import (
         ANN_K,
         ANN_QUERY_LIMIT,
     )
@@ -393,7 +397,7 @@ def test_quality_lr_matches_numpy_convex_replica(spark):
         quality_score,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import (
+    from hubsit_health_analytics_etl_spark.workloads.w09_curation_lifecycle import (
         _QLR_TEST_PCT,
         QUALITY_LABEL_THRESHOLD,
     )
@@ -473,7 +477,9 @@ def test_pca_reduce_scalars_match_exact_python_replay(spark):
         pca_components,
     )
     from hubsit_health_analytics_etl_spark.sources.parquet import load_table
-    from hubsit_health_analytics_etl_spark.workload_ext import PCA_K
+    from hubsit_health_analytics_etl_spark.workloads.w12_retrieval_sketches import (
+        PCA_K,
+    )
 
     ids, _, vecs = _load_embeddings(spark)
     emb = load_table(spark, SF_SMOKE, "embeddings")

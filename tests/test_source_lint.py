@@ -24,7 +24,7 @@ def _workload_sources() -> list[str]:
         glob.glob(os.path.join(PKG, "workload*.py"))
         + glob.glob(os.path.join(PKG, "workloads", "*.py"))
     )
-    assert len(paths) >= 19  # workload, workload_ext shim, 17 families + _shared
+    assert len(paths) >= 19  # workload, package __init__, _shared, 20 families
     return paths
 
 
