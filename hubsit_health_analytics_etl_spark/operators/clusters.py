@@ -975,9 +975,10 @@ def bfs_hops(
     Fixed ``max_hops`` rounds keep the loop declarative (no
     driver-side convergence collect); on a real cluster an early-exit
     ``frontier.isEmpty()`` probe per round is the lever when the ball
-    saturates before max_hops. Frontier and visited localCheckpoint
-    per round — per-round-flat lineage, the connected_components
-    posture. Symmetrize undirected graphs before calling.
+    saturates before max_hops. One eager localCheckpoint per round —
+    the newly reached frontier — keeps lineage flat; visited is the
+    lazy union of the seed frame and those checkpoints, never
+    re-checkpointed. Symmetrize undirected graphs before calling.
 
     ``seeds`` is a (node) frame; seed rows report dist 0.
 
@@ -1135,21 +1136,28 @@ def bellman_ford_costs(
     out-edges in the round after it last improved, so the delta
     iterate equals the full Bellman-Ford iterate round for round —
     work per round ∝ the improved set's edge cut, not the graph.
-    Exact integer costs; per-round localCheckpoint keeps lineage flat
-    (the connected_components posture; swap for reliable
-    ``checkpoint()`` on a cluster — SCALING.md "Iterative jobs").
+    Exact integer costs. One eager localCheckpoint per round — the
+    improved delta — keeps lineage flat; the running cost table is the
+    lazy union of the seed frame and those deltas, min-merged where it
+    is read (each round's improvement test and the returned table), so
+    nothing is re-derived and no second action per round is spent on
+    a merged copy (swap for reliable ``checkpoint()`` on a cluster —
+    SCALING.md "Iterative jobs").
 
     No pandas analogue in the reference (898-line ETL,
     /root/reference/src/etl_pipeline.py) — beyond-reference graph
     surface."""
     e = edges.select("src", "dst", "w").localCheckpoint(eager=True)
-    cost = (
+    delta = (
         seeds.select("node")
         .distinct()
         .select("node", F.lit(0).cast("bigint").alias("cost"))
         .localCheckpoint(eager=True)
     )
-    delta = cost
+    # lazy union of the seed frame and every checkpointed delta (the
+    # bfs_hops visited posture): min-merged where read, never
+    # materialized, so each round takes one eager action
+    cost = delta
     for _ in range(max_rounds):
         cand = (
             e.join(delta, e["src"] == delta["node"])
@@ -1160,17 +1168,12 @@ def bellman_ford_costs(
             .groupBy("node")
             .agg(F.min("cand").alias("cand"))
         )
-        improved = (
-            cand.join(cost, "node", "left")
+        best = cost.groupBy("node").agg(F.min("cost").alias("cost"))
+        delta = (
+            cand.join(best, "node", "left")
             .filter(F.col("cost").isNull() | (F.col("cand") < F.col("cost")))
             .select("node", F.col("cand").alias("cost"))
             .localCheckpoint(eager=True)
         )
-        cost = (
-            cost.unionByName(improved)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
-        )
-        delta = improved
-    return cost
+        cost = cost.unionByName(delta)
+    return cost.groupBy("node").agg(F.min("cost").alias("cost"))

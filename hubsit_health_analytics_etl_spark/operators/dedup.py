@@ -114,9 +114,18 @@ def exact_dup_representatives(
     on the md5 fingerprint; ``min_by`` keeps the representative's text
     deterministically (DuckDB twin: ``arg_min``).
     """
+    return _fingerprint_representatives(
+        docs.withColumn("fp", fingerprint(text_col)), id_col, text_col
+    )
+
+
+def _fingerprint_representatives(
+    docs: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """The group-by of :func:`exact_dup_representatives` over a frame
+    that already carries its ``fp`` fingerprint column."""
     return (
-        docs.withColumn("fp", fingerprint(text_col))
-        .groupBy("fp")
+        docs.groupBy("fp")
         .agg(
             F.min(id_col).alias(id_col),
             F.min_by(text_col, F.col(id_col)).alias(text_col),
@@ -177,8 +186,19 @@ def minhash_candidates(
       (JVM-side metric, zero extra pass).
     """
     if pre_exact_dedup:
-        docs = exact_dup_representatives(docs, id_col, text_col)
-    sh = _spread(docs).select(F.col(id_col), shingles_from_text(text_col).alias("sh"))
+        # ONE keyed exchange both dedups and spreads: a hash repartition
+        # on the fingerprint with an explicit count (REPARTITION_BY_NUM,
+        # which AQE never coalesces) already satisfies the group-by's
+        # distribution, so the representatives leave it spread over
+        # shuffle-partitions tasks — no _spread probe, whose
+        # df.rdd.getNumPartitions() would execute the exchange as an
+        # extra job before the first materialization
+        n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+        fp = docs.withColumn("fp", fingerprint(text_col)).repartition(n, "fp")
+        docs = _fingerprint_representatives(fp, id_col, text_col)
+    else:
+        docs = _spread(docs)
+    sh = docs.select(F.col(id_col), shingles_from_text(text_col).alias("sh"))
     sig = sh.select(id_col, shingle_base_hash("sh").alias("hs")).select(
         id_col, *minhash_signature("hs")
     )

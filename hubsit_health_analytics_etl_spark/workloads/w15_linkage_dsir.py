@@ -13,7 +13,7 @@ from ..operators.sampling import sql_hash_bucket  # noqa: E402
 from .w02_dedup import _run_scoped_index_dir, _sql_shingles  # noqa: E402
 from .w03_similarity_multimodal import _COS_SQL, q_ann_bruteforce_topk, q_ann_lsh_topk  # noqa: E402
 from .w05_clusters_ann import q_ann_ivf_nprobe_topk, q_ann_ivf_topk  # noqa: E402
-from .w14_graph import PPR_SEEDS, TRI_MIN_SUPPORT  # noqa: E402
+from .w14_graph import PPR_SEEDS, TRI_MIN_SUPPORT, copurchase_pairs, copurchase_seeds  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -80,31 +80,11 @@ def q_part_hops_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matched against the unrolled-CTE oracle."""
     from ..operators.clusters import bfs_hops
 
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    b = op.select(F.col("ok"), F.col("pk").alias("pb"))
-    und = (
-        op.join(b, (op["ok"] == b["ok"]) & (op["pk"] < b["pb"]))
-        .groupBy(F.col("pk").alias("u"), F.col("pb").alias("v"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= TRI_MIN_SUPPORT)
-        .select("u", "v")
-    )
+    und = copurchase_pairs(spark, sf_dir)
     edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
         und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    innodes = edges.select(F.col("src").alias("pk")).distinct()
-    seeds = (
-        op.join(innodes, "pk")
-        .groupBy("pk")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .orderBy(F.col("_c").desc(), F.col("pk"))
-        .limit(PPR_SEEDS)
-        .select(F.col("pk").alias("node"))
-    )
+    seeds = copurchase_seeds(spark, sf_dir, und)
     return bfs_hops(edges, seeds, max_hops=BFS_MAX_HOPS).select(
         F.col("node").alias("part_key"), "dist"
     )
@@ -1007,20 +987,7 @@ def q_copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clusters import link_prediction_scores
     from ..operators.reshape import top_k
 
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    b = op.select(F.col("ok"), F.col("pk").alias("pb"))
-    edges = (
-        op.join(b, (op["ok"] == b["ok"]) & (op["pk"] < b["pb"]))
-        .groupBy(F.col("pk").alias("u"), F.col("pb").alias("v"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= TRI_MIN_SUPPORT)
-        .select("u", "v")
-        .localCheckpoint()
-    )
+    edges = copurchase_pairs(spark, sf_dir).select("u", "v")
     s = link_prediction_scores(edges).select(
         "u", "v", "cn",
         F.floor(F.col("aa") * 1000000.0).cast("bigint").alias("aa_u6"),
@@ -1092,19 +1059,7 @@ def q_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle unrolls the peel as MATERIALIZED CTEs."""
     from ..operators.clusters import kcore_peel
 
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    b = op.select(F.col("ok"), F.col("pk").alias("pb"))
-    edges = (
-        op.join(b, (op["ok"] == b["ok"]) & (op["pk"] < b["pb"]))
-        .groupBy(F.col("pk").alias("u"), F.col("pb").alias("v"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= TRI_MIN_SUPPORT)
-        .select("u", "v")
-    )
+    edges = copurchase_pairs(spark, sf_dir).select("u", "v")
     return kcore_peel(edges, KCORE_K, KCORE_ROUNDS).select(
         F.col("node").alias("part_key"), "degree"
     )

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from ._shared import *  # noqa: F401,F403
 
-from .w14_graph import PPR_SEEDS, TRI_MIN_SUPPORT  # noqa: E402
+from .w14_graph import PPR_SEEDS, TRI_MIN_SUPPORT, copurchase_pairs, copurchase_seeds  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -1297,33 +1297,15 @@ def q_part_weighted_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     family composes into one reachability report."""
     from ..operators.clusters import bellman_ford_costs
 
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    b = op.select(F.col("ok"), F.col("pk").alias("pb"))
-    und = (
-        op.join(b, (op["ok"] == b["ok"]) & (op["pk"] < b["pb"]))
-        .groupBy(F.col("pk").alias("u"), F.col("pb").alias("v"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
-        .filter(F.col("_c") >= TRI_MIN_SUPPORT)
-        .select("u", "v", F.expr("cast(1000000 div _c as bigint)").alias("w"))
+    und = copurchase_pairs(spark, sf_dir).select(
+        "u", "v", F.expr("cast(1000000 div c as bigint)").alias("w")
     )
     edges = und.select(
         F.col("u").alias("src"), F.col("v").alias("dst"), "w"
     ).unionByName(
         und.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w")
     )
-    innodes = edges.select(F.col("src").alias("pk")).distinct()
-    seeds = (
-        op.join(innodes, "pk")
-        .groupBy("pk")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .orderBy(F.col("_c").desc(), F.col("pk"))
-        .limit(PPR_SEEDS)
-        .select(F.col("pk").alias("node"))
-    )
+    seeds = copurchase_seeds(spark, sf_dir, und)
     return bellman_ford_costs(edges, seeds, max_rounds=BF_MAX_ROUNDS).select(
         F.col("node").alias("part_key"), "cost"
     )

@@ -14,7 +14,7 @@ from .w02_dedup import NEW_BATCH_PCT, _run_scoped_index_dir, _sql_shingles  # no
 from .w06_joins_chunking import PACK_BUDGET, PACK_SHARDS  # noqa: E402
 from .w09_curation_lifecycle import FORGET_PCT  # noqa: E402
 from .w10_dataset_build import FUNNEL_WINDOW_MIN  # noqa: E402
-from .w14_graph import TRI_MIN_SUPPORT  # noqa: E402
+from .w14_graph import TRI_MIN_SUPPORT, copurchase_pairs  # noqa: E402
 from .w15_linkage_dsir import FUZZY_MAX_DIST  # noqa: E402
 from .w16_behavioral_stats import _markov_oracle  # noqa: E402
 
@@ -1304,22 +1304,10 @@ def q_copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer fold. Negative values = hub-and-spoke mixing (hubs attach
     to leaves), positive = core-periphery. Everything after the
     basket expansion is edge-table-sized."""
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    b = op.select(F.col("ok"), F.col("pk").alias("pb"))
-    und = (
-        op.join(b, (op["ok"] == b["ok"]) & (op["pk"] < b["pb"]))
-        .groupBy(F.col("pk").alias("u"), F.col("pb").alias("v"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= TRI_MIN_SUPPORT)
-        .select("u", "v")
-    )
+    und = copurchase_pairs(spark, sf_dir)
     e = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
         und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).localCheckpoint(eager=False)
+    )
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     ).localCheckpoint(eager=False)

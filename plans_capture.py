@@ -1,12 +1,16 @@
-"""Capture .explain('formatted') for declared queries into plans/r17/.
+"""Capture .explain('formatted') for declared queries into a plan-dump directory.
 
 Usage:
-    python plans_capture.py --suffix before [--queries a,b,c]
+    python plans_capture.py --suffix before --outdir plans/<change> [--queries a,b,c]
 
-Writes plans/r17/<query>_<suffix>.txt. bench.py's ``prelude`` runs the
-PREPARES first so standing indexes exist; query bodies that probe
-sizes at build time execute their probe jobs, which is fine — we only
-need the final plan text.
+Writes <outdir>/<query>_<suffix>.txt, one directory per change
+(plans/r17, plans/r18, ...). Run it once on the parent
+checkout with ``--suffix before`` and once on the change with
+``--suffix after`` into the same directory. The fixture scale is
+$SPARK_GRAFT_SF_DIR (bench.py's default, sf0.1). bench.py's
+``prelude`` runs the PREPARES first so standing indexes exist; query
+bodies that probe sizes or checkpoint at build time execute those
+jobs, which is fine — only the final plan text is kept.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--suffix", required=True)
     ap.add_argument("--queries", default="")
-    ap.add_argument("--outdir", default="plans/r17")
+    ap.add_argument("--outdir", required=True)
     args = ap.parse_args()
 
     from bench import prelude

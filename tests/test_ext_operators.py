@@ -3362,6 +3362,47 @@ def test_bfs_hops_matches_pure_python_reference(spark):
     assert "f" not in got and "g" not in got and "h" not in got
 
 
+def test_bellman_ford_costs_matches_pure_python_reference(spark):
+    """Independent reference: full-relaxation Bellman-Ford (dict
+    iterate, at most max_rounds edges per path) on a crafted weighted
+    digraph must match node-for-node. The graph pins: a node improved
+    in three consecutive rounds (a: 10 → 6 → 3), a 3-edge path cheaper
+    than the 1-edge path (s→c→d→a = 3 < s→a = 10), a node whose
+    cheapest path needs more edges than allowed (e = 7, not 4), a node
+    beyond max_rounds (x: 4 edges from any seed, absent), an
+    unreachable island (g, h) and seeds with in-edges that keep cost 0
+    (s, t; s also appears twice in the seed frame)."""
+    from hubsit_health_analytics_etl_spark.operators.clusters import (
+        bellman_ford_costs,
+    )
+
+    edges = [
+        ("s", "a", 10), ("s", "b", 1), ("b", "a", 5),
+        ("s", "c", 1), ("c", "d", 1), ("d", "a", 1),
+        ("a", "e", 1), ("e", "f", 1), ("f", "x", 1),
+        ("g", "h", 1), ("h", "g", 1),
+        ("a", "s", 1), ("b", "t", 0),
+    ]
+    df = spark.createDataFrame(edges, "src string, dst string, w bigint")
+    seeds = spark.createDataFrame([("s",), ("t",), ("s",)], "node string")
+    got = {
+        r["node"]: r["cost"]
+        for r in bellman_ford_costs(df, seeds, max_rounds=3).collect()
+    }
+
+    cost = {"s": 0, "t": 0}
+    for _ in range(3):
+        nxt = dict(cost)
+        for u, v, w in edges:
+            if u in cost and cost[u] + w < nxt.get(v, float("inf")):
+                nxt[v] = cost[u] + w
+        cost = nxt
+    assert got == cost
+    assert got["a"] == 3 and got["e"] == 7 and got["f"] == 12
+    assert got["s"] == 0 and got["t"] == 0
+    assert "x" not in got and "g" not in got and "h" not in got
+
+
 def test_dsir_logweights_matches_pure_python_reference(spark):
     """Independent reference: Counter-based DSIR (hashed-bigram
     add-one-smoothed log ratio) on a crafted corpus must match

@@ -1541,10 +1541,11 @@ def test_hits_edges_materialized_once_no_per_round_rescan(spark):
 
 
 def test_bfs_frontier_plan_zero_raw_scans_equi_joins_only(spark):
-    """bfs_hops: edges, frontier and visited all materialize per
-    round, so the returned distance table carries ZERO raw scans and
-    only equi-joins (the per-round anti-join included) — no
-    cartesian, no Python."""
+    """bfs_hops: the edges, the seeds and every round's frontier
+    materialize, and visited is the lazy union of those checkpoints,
+    so the returned distance table carries ZERO raw scans and only
+    equi-joins (the per-round anti-join included) — no cartesian, no
+    Python."""
     from hubsit_health_analytics_etl_spark.plans.explain import physical_plan
 
     p = physical_plan(_q("part_hops_bfs")(spark, SF_SMOKE))
@@ -1552,6 +1553,67 @@ def test_bfs_frontier_plan_zero_raw_scans_equi_joins_only(spark):
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "EvalPython" not in p
+
+
+def test_copurchase_aggregation_checkpointed_once_per_graph_query(
+    spark, monkeypatch
+):
+    """part_hops_bfs / part_weighted_distance: of all the frames the
+    builder checkpoints, exactly ONE holds the support-pruned
+    co-purchase aggregation over lineitem (the pair-support filter).
+    The seeds and the symmetrized edge frame read the materialized
+    pairs; deriving the seeds from the lazy edge frame re-ran the
+    whole pair aggregation a second time."""
+    import re
+
+    from hubsit_health_analytics_etl_spark.plans.explain import physical_plan
+    from hubsit_health_analytics_etl_spark.workloads.w14_graph import (
+        TRI_MIN_SUPPORT,
+    )
+
+    support = re.compile(rf"Condition : \(\w+#\d+L? >= {TRI_MIN_SUPPORT}\)")
+    plans = []
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        plans.append(physical_plan(df))
+        return orig(df, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    for name in ("part_hops_bfs", "part_weighted_distance"):
+        plans.clear()
+        _q(name)(spark, SF_SMOKE).collect()
+        hits = [p for p in plans if "lineitem.parquet" in p and support.search(p)]
+        assert len(hits) == 1, (name, len(hits), len(plans))
+
+
+def test_copurchase_pairs_equal_self_join(spark):
+    """copurchase_pairs (one-scan basket expansion) returns exactly the
+    rows of the oracles' distinct-(order, part) self-join with the
+    support count — the construction every co-purchase query used
+    before the helper."""
+    from hubsit_health_analytics_etl_spark.sources.parquet import load_table
+    from hubsit_health_analytics_etl_spark.workloads.w14_graph import (
+        TRI_MIN_SUPPORT,
+        copurchase_pairs,
+    )
+
+    op = (
+        load_table(spark, SF_SMOKE, "lineitem")
+        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+        .distinct()
+    )
+    b = op.select(F.col("ok"), F.col("pk").alias("pb"))
+    ref = (
+        op.join(b, (op["ok"] == b["ok"]) & (op["pk"] < b["pb"]))
+        .groupBy(F.col("pk").alias("u"), F.col("pb").alias("v"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") >= TRI_MIN_SUPPORT)
+    )
+    got = sorted(map(tuple, copurchase_pairs(spark, SF_SMOKE).collect()))
+    assert got == sorted(map(tuple, ref.collect()))
+    assert got, "empty pruned graph proves nothing"
 
 
 def test_dsir_weights_jvm_only_no_cartesian_broadcast_totals(spark):
