@@ -15,7 +15,7 @@ them sequentially. Two latency sources motivate this module:
   splice trio ran FASTER on 8 cores than on 32 (PERF_r17 scaling
   ratios 0.75–0.85), the signature of driver-sequenced tiny jobs.
 - Independent writes/counts (e.g. persisting the two halves of an IVF
-  index, probing two guard counts) serialize the same way.
+  index) serialize the same way.
 
 ``ckpt_wave`` / ``run_concurrent`` submit the independent pieces from
 a small thread pool so their jobs overlap: as one job's tail drains,

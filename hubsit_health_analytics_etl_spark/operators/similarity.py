@@ -371,15 +371,20 @@ def ivf_index(
 
     - ``centroids`` (cell, centroid array<double>): the coarse
       quantizer (label-mean by default, :func:`kmeans_centroids` for a
-      trained one).
+      trained one). The label-mean training runs ONCE, here, into an
+      eager checkpoint of its C rows — the quantizer is a model, not
+      data — so the centroid write and every assignment read that one
+      evaluation instead of re-deriving it from the corpus scan.
     - ``assignments`` (vec_id, embedding, nrm, cell): each corpus
-      vector in its home cell with its precomputed norm. At scale,
-      partition the files by ``cell`` so a query batch reads only the
-      cells it probes.
+      vector in its home cell with its precomputed norm, lazy. At
+      scale, partition the files by ``cell`` so a query batch reads
+      only the cells it probes.
     """
     if centroids is None:
-        centroids = label_mean_centroids(corpus, id_col, vec_col, label_col).select(
-            F.col(label_col).alias("cell"), "centroid"
+        centroids = (
+            label_mean_centroids(corpus, id_col, vec_col, label_col)
+            .select(F.col(label_col).alias("cell"), "centroid")
+            .localCheckpoint()
         )
     assigned = (
         _ranked_cells(corpus, centroids, id_col, vec_col)
@@ -389,33 +394,11 @@ def ivf_index(
     return centroids, assigned
 
 
-def ivf_forget_frames(
-    assignments: DataFrame,
-    deleted: DataFrame,
-    id_col: str = "vec_id",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(deleted ids, affected cells, remainder rows) — the frames
-    :func:`ivf_forget_vectors` rewrites from. Exposed so a caller can
-    run the two guard counts (``affected.count()``,
-    ``remainder.select('cell').distinct().count()``) CONCURRENTLY with
-    its own independent actions (e.g. the index writes the forget is
-    about to amend — guide §2.6) and hand them in as ``guard_counts``;
-    the frames are pure functions of the inputs, so the re-derivation
-    inside the forget is plan-identical."""
-    d = deleted.select(F.col(deleted.columns[0]).alias(id_col)).distinct()
-    affected = assignments.join(d, id_col, "left_semi").select("cell").distinct()
-    remainder = assignments.join(affected, "cell", "left_semi").join(
-        d, id_col, "left_anti"
-    )
-    return d, affected, remainder
-
-
 def ivf_forget_vectors(
     assignments: DataFrame,
     deleted: DataFrame,
     path: str,
     id_col: str = "vec_id",
-    guard_counts: "tuple[int, int] | None" = None,
 ) -> None:
     """Right-to-be-forgotten for a persisted, cell-partitioned IVF
     index: rewrite ONLY the cells containing a deleted vector, via
@@ -428,31 +411,42 @@ def ivf_forget_vectors(
 
     ``assignments`` must be the LOGICAL frame the index was written
     from (or a checkpoint) — not a read of ``path`` itself, which
-    Spark cannot overwrite mid-read. Fails loudly if a deletion would
+    Spark cannot overwrite mid-read. The distinct deleted ids are
+    checkpointed, then ONE guard job aggregates per cell over
+    ``assignments`` left-joined with the broadcast ids and collects
+    the affected cells (≤ C rows): how many postings each holds and
+    how many of them are deleted. Fails loudly if a deletion would
     EMPTY a cell: dynamic overwrite only replaces partitions present
     in the write, so an emptied cell would silently keep stale files —
     callers hitting this rewrite the full index (or tombstone) instead.
+    Deleted ids absent from the index touch no file.
     """
-    from .concurrency import run_concurrent
-
     spark = assignments.sparkSession
-    d, affected, remainder = ivf_forget_frames(assignments, deleted, id_col)
-    if guard_counts is not None:
-        # precomputed by a caller that overlapped the guard probes with
-        # its index writes (guide §2.6) — see ivf_forget_frames
-        n_affected, n_kept = guard_counts
-    else:
-        # the two guard counts are independent actions — overlap them
-        # (guide §2.6) instead of paying two sequential job cascades
-        n_affected, n_kept = run_concurrent(
-            affected.count, remainder.select("cell").distinct().count
-        )
-    if n_kept < n_affected:
+    ids = (
+        deleted.select(F.col(deleted.columns[0]).alias(id_col))
+        .distinct()
+        .localCheckpoint()
+    )
+    per_cell = (
+        assignments.join(F.broadcast(ids.withColumn("_del", F.lit(1))), id_col, "left")
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n"), F.count("_del").alias("n_del"))
+        .filter(F.col("n_del") > 0)
+        .collect()
+    )
+    n_emptied = sum(r["n_del"] == r["n"] for r in per_cell)
+    if n_emptied:
         raise RuntimeError(
-            f"ivf_forget_vectors would empty {n_affected - n_kept} cell(s): "
+            f"ivf_forget_vectors would empty {n_emptied} cell(s): "
             "dynamic partition overwrite cannot delete a partition — "
             "rewrite the index (or tombstone the cell) instead"
         )
+    affected = [r["cell"] for r in per_cell]
+    if not affected:
+        return
+    remainder = assignments.filter(F.col("cell").isin(affected)).join(
+        F.broadcast(ids), id_col, "left_anti"
+    )
     conf_key = "spark.sql.sources.partitionOverwriteMode"
     old = spark.conf.get(conf_key, "STATIC")
     spark.conf.set(conf_key, "dynamic")

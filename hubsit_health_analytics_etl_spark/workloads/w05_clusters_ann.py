@@ -456,17 +456,19 @@ def q_ann_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.concurrency import run_concurrent
 
     base = _run_scoped_index_dir("ivf_index")
+    cpath = os.path.join(base, "centroids")
+    apath = os.path.join(base, "assignments")
     cents, assigned = ivf_index(corpus)
     # the index's two halves are independent writes — overlap them
     # (guide §2.6) instead of two sequential write-job cascades
     run_concurrent(
-        lambda: write_parquet(cents, os.path.join(base, "centroids")),
-        lambda: write_parquet(
-            assigned, os.path.join(base, "assignments"), partition_by=["cell"]
-        ),
+        lambda: write_parquet(cents, cpath),
+        lambda: write_parquet(assigned, apath, partition_by=["cell"]),
     )
-    cents_rb = spark.read.parquet(os.path.join(base, "centroids"))
-    assigned_rb = spark.read.parquet(os.path.join(base, "assignments"))
+    # read back with the schema just written: no inference job; the
+    # cell column still comes from partition discovery
+    cents_rb = spark.read.schema(cents.schema).parquet(cpath)
+    assigned_rb = spark.read.schema(assigned.schema).parquet(apath)
     out = ivf_search_index(assigned_rb, cents_rb, batch, ANN_K)
     return out.withColumn("rank", F.col("rank").cast("bigint"))
 

@@ -525,29 +525,27 @@ def q_ann_forget_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, batch = emb.filter(~is_new), emb.filter(is_new)
 
     from ..operators.concurrency import run_concurrent
-    from ..operators.similarity import ivf_forget_frames
 
     base = _run_scoped_index_dir("ivf_forget")
-    cents, assigned = ivf_index(corpus)
+    cpath = os.path.join(base, "centroids")
     apath = os.path.join(base, "assignments")
+    cents, assigned = ivf_index(corpus)
+    # one materialization of the assignments feeds both index writes
+    # and the forget pass; the two writes are independent — overlap
+    # them (guide §2.6)
+    assigned = assigned.localCheckpoint(eager=False)
+    run_concurrent(
+        lambda: write_parquet(cents, cpath),
+        lambda: write_parquet(assigned, apath, partition_by=["cell"]),
+    )
     deleted = corpus.filter(
         hash_bucket("vec_id", salt="forget") < ANN_FORGET_PCT
     ).select("vec_id")
-    # four independent actions overlap (guide §2.6): the index's two
-    # halves write while the forget pass's two guard counts probe the
-    # LOGICAL assignments frame (they never read the written files)
-    _, affected, remainder = ivf_forget_frames(assigned, deleted)
-    _, _, n_affected, n_kept = run_concurrent(
-        lambda: write_parquet(cents, os.path.join(base, "centroids")),
-        lambda: write_parquet(assigned, apath, partition_by=["cell"]),
-        affected.count,
-        remainder.select("cell").distinct().count,
-    )
-    ivf_forget_vectors(
-        assigned, deleted, apath, guard_counts=(n_affected, n_kept)
-    )
-    cents_rb = spark.read.parquet(os.path.join(base, "centroids"))
-    assigned_rb = spark.read.parquet(apath)
+    ivf_forget_vectors(assigned, deleted, apath)
+    # read back with the schema just written: no inference job; the
+    # cell column still comes from partition discovery
+    cents_rb = spark.read.schema(cents.schema).parquet(cpath)
+    assigned_rb = spark.read.schema(assigned.schema).parquet(apath)
     out = ivf_search_index(assigned_rb, cents_rb, batch, ANN_K)
     return out.withColumn("rank", F.col("rank").cast("bigint"))
 

@@ -1077,6 +1077,86 @@ def test_ivf_forget_rewrites_only_affected_cells(spark, tmp_path):
     assert {r["vec_id"] for r in spark.read.parquet(path).collect()} == {1, 3, 4, 5, 6}
 
 
+def test_ivf_forget_matches_pure_python_reference(spark, tmp_path):
+    """ivf_forget_vectors against set arithmetic on a crafted index:
+    after each forget the read-back (vec_id, cell) rows equal the
+    reference ``cell -> ids - deleted``, and every cell the reference
+    leaves unchanged keeps its files byte-identical with the same
+    mtimes. Covers duplicate deleted ids over two cells, ids absent
+    from the index (no cell touched at all), and a deletion that would
+    empty a cell (raises; nothing on disk changes)."""
+    import os
+
+    import pytest
+
+    from hubsit_health_analytics_etl_spark.operators.similarity import (
+        ivf_forget_vectors,
+    )
+
+    ref = {0: {1, 2, 3, 4}, 1: {10, 11, 12}, 2: {20, 21}, 3: {30}}
+    path = str(tmp_path / "ivf")
+
+    def frame(index):
+        rows = [(v, c) for c, ids in index.items() for v in sorted(ids)]
+        return spark.createDataFrame(rows, "vec_id long, cell int")
+
+    def snapshot():
+        snap = {}
+        for cell_dir in sorted(os.listdir(path)):
+            d = os.path.join(path, cell_dir)
+            if not os.path.isdir(d):
+                continue
+            snap[cell_dir] = {}
+            for f in os.listdir(d):
+                if f.endswith(".parquet"):
+                    fp = os.path.join(d, f)
+                    with open(fp, "rb") as fh:
+                        snap[cell_dir][f] = (os.stat(fp).st_mtime_ns, fh.read())
+        return snap
+
+    def read_back():
+        out = {}
+        for r in spark.read.parquet(path).collect():
+            out.setdefault(r["cell"], set()).add(r["vec_id"])
+        return out
+
+    def forget(index, deleted_ids):
+        d = set(deleted_ids)
+        after = {c: ids - d for c, ids in index.items()}
+        if any(not ids for ids in after.values()):
+            raise RuntimeError("would empty a cell")
+        return after
+
+    frame(ref).write.mode("overwrite").partitionBy("cell").parquet(path)
+    cases = [
+        [2, 2, 11, 4, 11],  # duplicates; cells 0 and 1 affected
+        [99, 100, 99],  # absent from the index: a no-op
+    ]
+    for ids in cases:
+        before = snapshot()
+        expect = forget(ref, ids)
+        deleted = spark.createDataFrame([(i,) for i in ids], "id long")
+        ivf_forget_vectors(frame(ref), deleted, path)
+        assert read_back() == expect
+        after = snapshot()
+        for c in ref:
+            if expect[c] == ref[c]:
+                assert after[f"cell={c}"] == before[f"cell={c}"], (ids, c)
+        ref = expect
+    assert ref == {0: {1, 3}, 1: {10, 12}, 2: {20, 21}, 3: {30}}
+
+    # 30 is cell 3's last vector: the reference refuses, and so must the
+    # operator — before it rewrites cell 0 for id 1
+    before = snapshot()
+    with pytest.raises(RuntimeError, match="empty"):
+        forget(ref, [1, 30])
+    deleted = spark.createDataFrame([(1,), (30,)], "vec_id long")
+    with pytest.raises(RuntimeError, match="empty 1 cell"):
+        ivf_forget_vectors(frame(ref), deleted, path)
+    assert snapshot() == before
+    assert read_back() == ref
+
+
 def test_embedding_pca_reduce_finds_optimal_subspace(spark):
     """Spark ML PCA must land in the SAME top-K subspace as a local
     eigendecomposition of the centered covariance: projected energy

@@ -143,7 +143,8 @@ def test_ann_lsh_plans_equi_join_only(spark):
 
 
 @pytest.mark.parametrize(
-    "name", ["ann_ivf_topk", "ann_ivf_nprobe_topk", "ann_incremental_topk"]
+    "name",
+    ["ann_ivf_topk", "ann_ivf_nprobe_topk", "ann_incremental_topk", "ann_forget_topk"],
 )
 def test_ann_ivf_cell_search_is_equi_join(spark, name):
     """IVF ANN: the centroid ASSIGNMENT is a deliberate cross join
@@ -317,13 +318,22 @@ def test_ivf_index_partitioned_by_cell_prunes(spark):
     """The persisted IVF assignments are written partitionBy("cell");
     the batch search must plan DYNAMIC PARTITION PRUNING on the cell
     join — at scale a small batch then reads only its probed cells'
-    directories, not the whole index."""
+    directories, not the whole index. Both index builds read the index
+    back with the schema they wrote; ``cell`` must still arrive as a
+    discovered partition column, or the pruning filter has nothing to
+    prune."""
     from hubsit_health_analytics_etl_spark.plans.explain import physical_plan
 
-    p = physical_plan(_q("ann_incremental_topk")(spark, SF_SMOKE))
-    scans = [seg for seg in p.split("Scan parquet") if "assignments" in seg.split("ReadSchema")[0]]
-    assert scans, p
-    assert any("dynamicpruning" in s.split("ReadSchema")[0].lower() for s in scans), p
+    for name in ("ann_incremental_topk", "ann_forget_topk"):
+        p = physical_plan(_q(name)(spark, SF_SMOKE))
+        scans = [
+            seg for seg in p.split("Scan parquet")
+            if "assignments" in seg.split("ReadSchema")[0]
+        ]
+        assert scans, (name, p)
+        assert any(
+            "dynamicpruning" in s.split("ReadSchema")[0].lower() for s in scans
+        ), (name, p)
 
 
 def test_scale_params_hold_bucket_size_constant():
@@ -2124,3 +2134,35 @@ def test_llm_dataset_merge_only_never_retrains_and_is_batch_proportional(
             assert n <= cap, (fname, n, "cap", cap, "corpus", n_corpus)
     assert set(feeds) >= {"annotate_documents", "_doc_grams",
                           "apply_cut_positions", "bpe_apply_merges"}
+
+
+@pytest.mark.parametrize("name", ["ann_forget_topk", "ann_incremental_topk"])
+def test_ivf_centroid_training_runs_once_per_index_build(spark, monkeypatch, name):
+    """Of all the actions the IVF index builders run (checkpoints,
+    counts, collects, parquet writes), exactly ONE may carry the
+    label-mean centroid training (its ``posexplode`` of the embedding)
+    in its plan: the trained quantizer is materialized once and the
+    centroid write, the assignment write and the forget pass all read
+    that one evaluation. A lazy centroid frame re-ran the training in
+    every consumer (5 actions in the forget build, 2 in the plain
+    one)."""
+    df_cls = type(spark.range(1))
+    writer_cls = type(spark.range(1).write)
+    hits = []
+
+    def spy(cls, meth, frame_of):
+        orig = getattr(cls, meth)
+
+        def wrapped(self, *args, **kwargs):
+            analyzed = frame_of(self)._jdf.queryExecution().analyzed().toString()
+            if "Generate posexplode" in analyzed:
+                hits.append(meth)
+            return orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, meth, wrapped)
+
+    for meth in ("localCheckpoint", "count", "collect"):
+        spy(df_cls, meth, lambda df: df)
+    spy(writer_cls, "parquet", lambda w: w._df)
+    _q(name)(spark, SF_SMOKE)
+    assert len(hits) == 1, hits
