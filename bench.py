@@ -9,8 +9,10 @@ captures only the tail of stdout, and a full 83-query grid (~3.3 KB)
 gets truncated mid-line — six rounds of BENCH_r*.json carried
 ``"parsed": null`` because of exactly that. The stdout line now holds
 the total plus the 10 most expensive queries; the FULL per-query grid
-is written to ``bench_evidence/latest_full_grid.json`` every run (and
-the per-round snapshots committed there remain the durable record).
+is written to ``bench_evidence/latest_full_grid.json`` every run, and
+also to ``latest_full_grid_c{cores}.json`` so a run at one core count
+does not overwrite another's grid (the per-round snapshots committed
+there remain the durable record).
 
 Timing = full query execution via ``df.write.format("noop")``: the
 noop sink consumes every InternalRow JVM-side, so every projected
@@ -102,9 +104,11 @@ def main() -> None:
     }
     if warm_runs:
         full["warm_runs"] = warm_runs
+    cores = spark.sparkContext.defaultParallelism
     os.makedirs(os.path.join(here, "bench_evidence"), exist_ok=True)
-    with open(os.path.join(here, grid_path), "w") as f:
-        json.dump(full, f, indent=1)
+    for path in (grid_path, grid_path.replace(".json", f"_c{cores}.json")):
+        with open(os.path.join(here, path), "w") as f:
+            json.dump(full, f, indent=1)
 
     top10 = dict(
         sorted(timings.items(), key=lambda kv: -kv[1])[:10]

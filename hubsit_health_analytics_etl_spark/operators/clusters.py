@@ -11,15 +11,18 @@ short chains dedup graphs produce.
 Iterative (driver-side loop over lazy plans) → not expressible as one
 SQL query, so the workload registration is rows-only; correctness is
 pinned by unit tests on crafted graphs. At scale: each iteration is a
-self-join + groupBy min on (node, label) — shuffle on node ids; use
-checkpointing every few iterations to truncate lineage (done here via
-localCheckpoint, or reliable checkpoint given ``checkpoint_dir``).
+self-join + groupBy min on (node, label) — shuffle on node ids; every
+round truncates lineage through ``concurrency.materialize`` (reliable
+``checkpoint`` when the session has a checkpoint directory,
+``localCheckpoint`` otherwise).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from .concurrency import materialize
 
 # Broadcast guard for the edge-splice's COMPONENT-bounded membership
 # frame (ADVICE r16 medium): (node, component) rows ≈ 16 B, so 1M
@@ -36,7 +39,6 @@ def connected_components(
     dst: str = "doc_b",
     max_iter: int = 20,
     compress: bool = True,
-    checkpoint_dir: str | None = None,
     stats: "dict | None" = None,
 ) -> DataFrame:
     """(node, component) for every node in ``pairs``; component = min
@@ -56,30 +58,18 @@ def connected_components(
       diameter (one extra small self-join per round, on the label
       frame — cheap next to the edge join it saves rounds of).
 
-    Fault tolerance: the default per-round materialization is
-    ``localCheckpoint`` — executor-local blocks, fast, but LOST if an
-    executor dies, which kills a long iterative job at cluster scale.
-    Pass ``checkpoint_dir`` (an HDFS/S3 path in production) to use
-    RELIABLE ``df.checkpoint()`` instead: each round's labels persist
+    Fault tolerance: each round's labels go through
+    ``concurrency.materialize``. Without a session checkpoint directory
+    that is ``localCheckpoint`` — executor-local blocks, fast, but LOST
+    if an executor dies. A deployment that sets one (an HDFS/S3 path)
+    gets RELIABLE ``checkpoint`` instead: each round's labels persist
     to storage that survives executor loss, so a 100 TB clustering
     resumes its lineage from the last round rather than recomputing
-    from the raw edge pipeline. Bench/test harnesses keep the default
-    (SCALING.md "Iterative jobs").
+    from the raw edge pipeline (SCALING.md "Iterative jobs").
 
     ``stats``: pass a dict to receive ``{"n_rounds": k}`` — the
     scale-invariant observability hook (bench_scale.py records that
     round counts stay ~log(diameter)-flat as the corpus grows 10x)."""
-    spark = pairs.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        """Eager checkpoint: runs one job, which the convergence probe
-        rides via Observation."""
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -88,7 +78,7 @@ def connected_components(
     # materialize once: every iteration joins edges — without this the
     # upstream pair-generation pipeline (e.g. the full MinHash LSH) is
     # re-executed per iteration
-    edges = _materialize(edges)
+    edges = materialize(edges, eager=True)
     # label starts as min neighbor (including self)
     labels = (
         edges.groupBy("u")
@@ -134,7 +124,7 @@ def connected_components(
         new_labels = new_labels.select(
             "node", "comp", (F.col("comp") != F.col("old")).alias("_changed")
         )
-        # the convergence probe RIDES the materialization job as an
+        # the convergence probe RIDES the eager materialization job as an
         # Observation metric (one driver-sequenced action per round
         # instead of two — the checkpoint's count and a second
         # cached-scan job used to run back-to-back)
@@ -144,7 +134,7 @@ def connected_components(
         new_labels = new_labels.observe(
             obs, F.sum(F.col("_changed").cast("long")).alias("n_changed")
         )
-        new_labels = _materialize(new_labels)
+        new_labels = materialize(new_labels, eager=True)
         changed = int(obs.get["n_changed"] or 0)
         labels = new_labels.select("node", "comp")
         if changed == 0:
@@ -382,18 +372,18 @@ def forget_documents(
     d = (
         deleted.select(F.col(deleted.columns[0]).alias("node"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     affected_comps = (
         d.join(index_labels, "node")
         .select("component")
         .distinct()
-        .localCheckpoint(eager=False)  # consumers: affected, unaffected anti
+        .transform(materialize)  # consumers: affected, unaffected anti
     )
     affected = index_labels.join(affected_comps, "component")
     survivors = affected.select("node").join(
         d, "node", "left_anti"
-    ).localCheckpoint(eager=False)  # consumers: edge semi ×2 + relabel
+    ).transform(materialize)  # consumers: edge semi ×2 + relabel
     e = index_edges.select(F.col(src).alias("doc_a"), F.col(dst).alias("doc_b"))
     e = e.join(
         survivors.select(F.col("node").alias("doc_a")), "doc_a", "left_semi"
@@ -402,7 +392,7 @@ def forget_documents(
     relabelled = survivors.join(sub_labels, "node", "left").select(
         "node",
         F.coalesce(F.col("component"), F.col("node")).alias("component"),
-    ).localCheckpoint(eager=False)  # consumers: full union + caller joins
+    ).transform(materialize)  # consumers: full union + caller joins
     unaffected = index_labels.join(affected_comps, "component", "left_anti")
     return unaffected.select("node", "component").unionByName(relabelled)
 
@@ -470,7 +460,7 @@ def splice_cluster_edges(
         e_delta.select(F.col("doc_a").alias("node"))
         .union(e_delta.select(F.col("doc_b").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     # label lookup for touched nodes: broadcast-probe the label SCAN,
     # then outer-map the (small) touched set over the (small) hits —
@@ -480,11 +470,11 @@ def splice_cluster_edges(
         touched.join(F.broadcast(touched_hits), "node", "left")
         .select(F.coalesce(F.col("component"), F.col("node")).alias("component"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     affected = index_labels.join(
         F.broadcast(affected_comps), "component"
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     # ADVICE r16 medium: `affected` is COMPONENT-size bounded, not
     # batch-bounded — one batch edge touching a giant near-duplicate
     # cluster pulls the whole component in. Probe its size (the count
@@ -512,7 +502,7 @@ def splice_cluster_edges(
     # pointer-jumping round, and an unmaterialized sub_edges would
     # re-SCAN the corpus-sized persisted edge table per round — the
     # one corpus-∝ term the r16 attribution found left in the splice
-    sub_edges = e.unionByName(e_add).localCheckpoint(eager=False)
+    sub_edges = e.unionByName(e_add).transform(materialize)
     sub_labels = connected_components(sub_edges, "doc_a", "doc_b")
     all_nodes = affected.select("node").union(touched)
     if new_nodes is not None:
@@ -524,7 +514,7 @@ def splice_cluster_edges(
             "node",
             F.coalesce(F.col("component"), F.col("node")).alias("component"),
         )
-        .localCheckpoint(eager=False)  # consumers: return union + delta
+        .transform(materialize)  # consumers: return union + delta
     )
     unaffected = index_labels.join(
         F.broadcast(affected_comps), "component", "left_anti"
@@ -545,7 +535,7 @@ def _incremental_labels(
     """(full updated labels, delta) — delta is just the re-labelled
     (affected ∪ batch) rows, what an incremental sink persists per
     micro-batch instead of rewriting the corpus-sized label table."""
-    # every fan-out node truncates its lineage (lazy localCheckpoint,
+    # every fan-out node truncates its lineage (lazy materialize,
     # the splice_cluster_edges recipe): new_edges is typically the full
     # incremental exact/MinHash PROBE PIPELINE (corpus-wide md5/shingle
     # compute) and is consumed by touched + sub_edges + — through the
@@ -554,22 +544,22 @@ def _incremental_labels(
     # (broadcast-scan plans have no shuffle files to reuse)
     e = (
         new_edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     touched = e.select(F.col("u").alias("node")).union(
         e.select(F.col("v").alias("node"))
-    ).distinct().localCheckpoint(eager=False)  # consumers: comps, all_nodes
+    ).distinct().transform(materialize)  # consumers: comps, all_nodes
     # components needing a re-label: labels of touched corpus nodes;
     # batch nodes (absent from the index) count as their own component
     affected_comps = (
         touched.join(index_labels, "node", "left")
         .select(F.coalesce(F.col("component"), F.col("node")).alias("component"))
         .distinct()
-        .localCheckpoint(eager=False)  # consumers: affected, unaffected anti
+        .transform(materialize)  # consumers: affected, unaffected anti
     )
     affected = index_labels.join(
         affected_comps, "component"
-    ).localCheckpoint(eager=False)  # consumers: star, all_nodes
+    ).transform(materialize)  # consumers: star, all_nodes
     star = affected.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_a"), F.col("component").alias("doc_b")
     )
@@ -586,7 +576,7 @@ def _incremental_labels(
     relabelled = all_nodes.join(sub_labels, "node", "left").select(
         "node",
         F.coalesce(F.col("component"), F.col("node")).alias("component"),
-    ).localCheckpoint(eager=False)  # consumers: full union + delta
+    ).transform(materialize)  # consumers: full union + delta
     unaffected = index_labels.join(affected_comps, "component", "left_anti")
     full = unaffected.select("node", "component").unionByName(relabelled)
     return full, relabelled
@@ -652,11 +642,7 @@ def label_propagation(
             F.col("s.lab").alias("lab"),
             F.lit(t).cast("bigint").alias("rnd"),
         )
-        labels = labels.unionByName(adopted)
-        try:
-            labels = labels.localCheckpoint(eager=True)
-        except Exception:
-            pass
+        labels = labels.unionByName(adopted).transform(materialize, eager=True)
     return labels
 
 
@@ -666,7 +652,6 @@ def page_rank(
     init_u6: int = 1_000_000,
     damp_num: int = 85,
     damp_den: int = 100,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list ``(src,
     dst)`` — the canonical iterative graph metric next to
@@ -693,14 +678,11 @@ def page_rank(
     contract holds by construction.
 
     Scale posture: degrees are computed ONCE and the (src, dst, d)
-    frame is localCheckpoint-materialized — each iteration re-reads
-    materialized edge partitions instead of re-planning the upstream
-    edge pipeline, and costs exactly one join shuffle (ranks×edges on
-    src) + one agg shuffle (groupBy dst); lineage is per-iteration
-    flat. For deep iteration counts on a real cluster pass
-    ``checkpoint_every`` to cut the rank lineage with a reliable
-    checkpoint every c rounds (same lever as connected_components'
-    ``checkpoint_dir``).
+    frame is materialized — each iteration re-reads materialized edge
+    partitions instead of re-planning the upstream edge pipeline, and
+    costs exactly one join shuffle (ranks×edges on src) + one agg
+    shuffle (groupBy dst). The rank frame itself is not checkpointed:
+    at the fixed few iterations its lineage stays short.
 
     No pandas analogue in the reference (898-line ETL,
     /root/reference/src/etl_pipeline.py) — beyond-reference graph
@@ -710,21 +692,21 @@ def page_rank(
     # full fact-table join + distinct) executes exactly once — the two
     # derived checkpoints used to each re-run it (guide §5: never
     # execute a lineage twice)
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
+    edges = edges.select("src", "dst").transform(materialize, eager=True)
     # both standing frames materialize once: deg seeds the rank vector
     # and rides every contribution join — neither may re-plan the
     # upstream edge pipeline per iteration
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
-    edges_deg = edges.join(deg, "src").localCheckpoint(eager=True)
+    edges_deg = edges.join(deg, "src").transform(materialize, eager=True)
     base = (init_u6 * (damp_den - damp_num)) // damp_den
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(init_u6).cast("bigint").alias("r")
     )
-    for i in range(n_iter):
+    for _ in range(n_iter):
         contrib = edges_deg.join(
             ranks, edges_deg["src"] == ranks["node"]
         ).select(F.col("dst"), F.expr("r div d").alias("c"))
@@ -738,8 +720,6 @@ def page_rank(
                 ).alias("r"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", F.col("r").alias("rank_u6"))
 
 
@@ -854,13 +834,13 @@ def personalized_page_rank(
     # edge list first, derived frames from its cached blocks — the
     # upstream edge pipeline executes once, not once per checkpoint
     # (guide §5; the page_rank posture)
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
+    edges = edges.select("src", "dst").transform(materialize, eager=True)
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
-    edges_deg = edges.join(deg, "src").localCheckpoint(eager=True)
+    edges_deg = edges.join(deg, "src").transform(materialize, eager=True)
     base = (init_u6 * (damp_den - damp_num)) // damp_den
     ranks = seeds.select(
         F.col("seed"),
@@ -924,7 +904,7 @@ def hits_scores(
     the divisor is uniform.
 
     Scale posture: the edge list materializes ONCE
-    (localCheckpoint) and each round costs exactly two join+agg
+    (materialize) and each round costs exactly two join+agg
     shuffles; lineage is per-round flat. Returns ``(auth, hubs)`` as
     (node, score) frames — nodes with no in-(resp. out-)edges are
     absent, i.e. score 0.
@@ -932,7 +912,7 @@ def hits_scores(
     No pandas analogue in the reference (898-line ETL,
     /root/reference/src/etl_pipeline.py) — beyond-reference graph
     surface."""
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    e = edges.select("src", "dst").transform(materialize, eager=True)
     hubs = e.select("src").distinct().select(
         F.col("src").alias("node"), F.lit(1).cast("bigint").alias("score")
     )
@@ -975,7 +955,7 @@ def bfs_hops(
     Fixed ``max_hops`` rounds keep the loop declarative (no
     driver-side convergence collect); on a real cluster an early-exit
     ``frontier.isEmpty()`` probe per round is the lever when the ball
-    saturates before max_hops. One eager localCheckpoint per round —
+    saturates before max_hops. One eager materialization per round —
     the newly reached frontier — keeps lineage flat; visited is the
     lazy union of the seed frame and those checkpoints, never
     re-checkpointed. Symmetrize undirected graphs before calling.
@@ -985,12 +965,12 @@ def bfs_hops(
     No pandas analogue in the reference (898-line ETL,
     /root/reference/src/etl_pipeline.py) — beyond-reference graph
     surface."""
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    e = edges.select("src", "dst").transform(materialize, eager=True)
     visited = (
         seeds.select("node")
         .distinct()
         .select("node", F.lit(0).cast("bigint").alias("dist"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     frontier = visited.select("node")
     for i in range(1, max_hops + 1):
@@ -1002,7 +982,7 @@ def bfs_hops(
         new = nbrs.join(visited.select("node"), "node", "left_anti").select(
             "node", F.lit(i).cast("bigint").alias("dist")
         )
-        new = new.localCheckpoint(eager=True)
+        new = materialize(new, eager=True)
         # visited stays a LAZY union of the per-round checkpointed
         # frontiers: each round's anti-join re-reads i cached block
         # sets (no recompute anywhere), which halves the per-round
@@ -1089,13 +1069,13 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     rather than one k-cut.
 
     Each round costs one degree agg + two semi-joins over the
-    shrinking edge frame; per-round localCheckpoint keeps lineage
+    shrinking edge frame; per-round materialization keeps lineage
     flat (the iterative-family posture).
 
     No pandas analogue in the reference (898-line ETL,
     /root/reference/src/etl_pipeline.py) — beyond-reference graph
     surface."""
-    e = edges.select("u", "v").localCheckpoint(eager=True)
+    e = edges.select("u", "v").transform(materialize, eager=True)
     for _ in range(rounds):
         deg = (
             e.select(F.col("u").alias("node"))
@@ -1108,7 +1088,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
     return (
         e.select(F.col("u").alias("node"))
@@ -1136,23 +1116,23 @@ def bellman_ford_costs(
     out-edges in the round after it last improved, so the delta
     iterate equals the full Bellman-Ford iterate round for round —
     work per round ∝ the improved set's edge cut, not the graph.
-    Exact integer costs. One eager localCheckpoint per round — the
+    Exact integer costs. One eager materialization per round — the
     improved delta — keeps lineage flat; the running cost table is the
     lazy union of the seed frame and those deltas, min-merged where it
     is read (each round's improvement test and the returned table), so
     nothing is re-derived and no second action per round is spent on
-    a merged copy (swap for reliable ``checkpoint()`` on a cluster —
-    SCALING.md "Iterative jobs").
+    a merged copy (reliable on a cluster whose session sets a
+    checkpoint directory — SCALING.md "Iterative jobs").
 
     No pandas analogue in the reference (898-line ETL,
     /root/reference/src/etl_pipeline.py) — beyond-reference graph
     surface."""
-    e = edges.select("src", "dst", "w").localCheckpoint(eager=True)
+    e = edges.select("src", "dst", "w").transform(materialize, eager=True)
     delta = (
         seeds.select("node")
         .distinct()
         .select("node", F.lit(0).cast("bigint").alias("cost"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     # lazy union of the seed frame and every checkpointed delta (the
     # bfs_hops visited posture): min-merged where read, never
@@ -1173,7 +1153,7 @@ def bellman_ford_costs(
             cand.join(best, "node", "left")
             .filter(F.col("cost").isNull() | (F.col("cand") < F.col("cost")))
             .select("node", F.col("cand").alias("cost"))
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
         cost = cost.unionByName(delta)
     return cost.groupBy("node").agg(F.min("cost").alias("cost"))

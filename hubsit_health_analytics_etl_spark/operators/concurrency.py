@@ -1,10 +1,20 @@
-"""Driver-side concurrency for independent Spark actions (guide §2.6).
+"""Materialization and driver-side concurrency for independent Spark
+actions (guide §2.6).
+
+``materialize`` is the package's one checkpoint call: every operator
+that truncates lineage goes through it, and the SESSION decides the
+mode. With a checkpoint directory set on the SparkContext (a
+deployment path on durable storage, ``setCheckpointDir``) every
+materialization is a RELIABLE ``checkpoint`` that survives executor
+loss; without one it is an executor-local ``localCheckpoint`` — fast,
+lost with its executor, right for bench and tests. No operator takes
+a mode parameter.
 
 Spark's scheduler happily runs several jobs at once inside one
 application; actions are only sequential because driver code calls
 them sequentially. Two latency sources motivate this module:
 
-- ``DataFrame.localCheckpoint(eager=False)`` is NOT free at call time:
+- ``materialize(df)`` (a lazy checkpoint) is NOT free at call time:
   under AQE, compiling the checkpoint executes every exchange stage of
   its subplan synchronously (``AdaptiveSparkPlanExec.execute`` →
   ``getFinalPhysicalPlan`` materializes all query stages; only the
@@ -28,7 +38,7 @@ a wave thread — so UI labels and per-group job accounting
 
 Semantics are UNCHANGED by construction: every frame/thunk is
 independent of its wave-mates (callers assert that by choosing the
-wave), each ``localCheckpoint`` call produces the exact DataFrame the
+wave), each ``materialize`` call produces the exact DataFrame the
 sequential code produced, and exceptions propagate eagerly through
 ``Future.result()``. This is concurrency of *scheduling*, not any
 form of caching — every run still computes from the parquet inputs.
@@ -58,8 +68,21 @@ def _inherit(fn: Callable[..., T]) -> Callable[..., T]:
     return inheritable_thread_target(SparkSession.active())(fn)
 
 
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Checkpoint ``df`` so later plans start from its materialized
+    blocks instead of re-running its lineage — reliable ``checkpoint``
+    when the session has a checkpoint directory, ``localCheckpoint``
+    otherwise. ``eager`` runs the job now; lazy writes the blocks on
+    the first action that reads them. Chains use
+    ``df.transform(materialize)`` / ``.transform(materialize,
+    eager=True)``."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
+
+
 def ckpt_wave(*dfs: DataFrame) -> tuple[DataFrame, ...]:
-    """``localCheckpoint(eager=False)`` several INDEPENDENT frames
+    """``materialize`` several INDEPENDENT frames (lazily)
     concurrently and return them in order.
 
     Each checkpoint call synchronously materializes its subplan's AQE
@@ -70,13 +93,9 @@ def ckpt_wave(*dfs: DataFrame) -> tuple[DataFrame, ...]:
     if not dfs:
         return ()
     if len(dfs) == 1:
-        return (dfs[0].localCheckpoint(eager=False),)
-
-    def _ck(d: DataFrame) -> DataFrame:
-        return d.localCheckpoint(eager=False)
-
+        return (materialize(dfs[0]),)
     with ThreadPoolExecutor(max_workers=min(len(dfs), MAX_WAVE_POOL)) as pool:
-        futs = [pool.submit(_inherit(_ck), d) for d in dfs]
+        futs = [pool.submit(_inherit(materialize), d) for d in dfs]
         return tuple(f.result() for f in futs)
 
 

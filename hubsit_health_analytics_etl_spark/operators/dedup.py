@@ -20,6 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .concurrency import materialize
 from .textanalysis import fingerprint
 
 from .scaleparams import bucket_cap_for
@@ -346,12 +347,12 @@ def incremental_minhash_candidates(
     if bucket_cap is not None and index_bucket_sizes is not None:
         # broadcast-scan plans have no shuffle files to reuse across
         # re-executions, so every multi-consumer node here truncates
-        # its lineage (lazy localCheckpoint) — without it each
+        # its lineage (lazy materialize) — without it each
         # downstream consumer re-runs the whole probe chain
         aff = (
             new_bands.select("band_idx", "band_key")
             .distinct()
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         idx_aff = index_bands.join(F.broadcast(aff), ["band_idx", "band_key"])
         n_new = new_bands.groupBy("band_idx", "band_key").agg(
@@ -386,7 +387,7 @@ def incremental_minhash_candidates(
             )
         ok = sizes.filter(~oversized).select(
             "band_idx", "band_key"
-        ).localCheckpoint(eager=False)
+        ).transform(materialize)
         a = new_bands.join(F.broadcast(ok), ["band_idx", "band_key"]).select(
             "band_idx", "band_key", F.col(id_col).alias("new_id")
         )
@@ -403,7 +404,7 @@ def incremental_minhash_candidates(
                 F.greatest("new_id", "other_id").alias("doc_b"),
             )
             .distinct()
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         # candidate-bounded shingle verify: only candidate ids' stored
         # hashes leave the index scan (no corpus-wide union join)
@@ -417,7 +418,7 @@ def incremental_minhash_candidates(
             .unionByName(
                 new_shingles.join(F.broadcast(cand_ids), id_col, "left_semi")
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         pairs = pairs.join(
             F.broadcast(
@@ -779,7 +780,7 @@ def capped_pair_retractions(
     # re-executions — every fan-out node truncates its lineage
     n_new = new_bands.groupBy("band_idx", "band_key").agg(
         F.count(F.lit(1)).alias("n_new")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     touched_sizes = (
         n_new.join(
             F.broadcast(
@@ -802,7 +803,7 @@ def capped_pair_retractions(
     )
     newly_over = touched_sizes.filter(
         (F.col("n_std") <= cap) & (F.col("n_union") > cap)
-    ).select("band_idx", "band_key").localCheckpoint(eager=False)
+    ).select("band_idx", "band_key").transform(materialize)
     over_members = index_bands.join(
         F.broadcast(newly_over), ["band_idx", "band_key"]
     )
@@ -824,7 +825,7 @@ def capped_pair_retractions(
     # is probed by the broadcast-small re-pair set, never shuffled)
     cand = standing_pairs.select("doc_a", "doc_b").join(
         F.broadcast(repairs), ["doc_a", "doc_b"], "left_semi"
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     # support re-check over the candidate ids' postings only: a pair
     # survives iff SOME shared band bucket stays ≤ cap at union time
     cand_ids = (
@@ -834,7 +835,7 @@ def capped_pair_retractions(
     )
     bands_cand = index_bands.join(
         F.broadcast(cand_ids), id_col, "left_semi"
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     shared = (
         cand.join(
             F.broadcast(
@@ -856,7 +857,7 @@ def capped_pair_retractions(
         )
         .filter(F.col("band_key") == F.col("key_b"))
         .select("doc_a", "doc_b", "band_idx", "band_key")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     shared_keys = shared.select("band_idx", "band_key").distinct()
     shared_sizes = (
@@ -948,7 +949,7 @@ def bucket_underflow_candidates(
             & (F.col("n_new") > 1)
         )
         .select("band_idx", "band_key")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     ub = surviving_bands.join(F.broadcast(newly_under), ["band_idx", "band_key"])
     return (
@@ -1121,7 +1122,7 @@ def jaccard_prefix_filter_pairs(
         F.explode(
             F.expr("transform(sh, s -> cast(conv(substr(md5(s), 1, 15), 16, 10) as bigint))")
         ).alias("s"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     dfreq = inv.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     # Pin the per-document window's partitioning (and with it every
     # downstream stage, which inherits hashpartitioning(id) through

@@ -16,6 +16,8 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .concurrency import materialize
+
 
 def quality_profile(
     df: DataFrame,
@@ -70,7 +72,7 @@ def event_stream_hygiene_audit(e: DataFrame) -> DataFrame:
     and referential_integrity_audit (keys)."""
     from pyspark.sql import Window
 
-    e = e.localCheckpoint(eager=False)
+    e = materialize(e)
     n = e.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
     w = Window.partitionBy("user_id").orderBy("event_id")
     ooo = (

@@ -23,6 +23,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .concurrency import materialize
 from .scaleparams import ivf_cells_for, lsh_planes_for
 
 EMBED_DIM = 64
@@ -384,7 +385,7 @@ def ivf_index(
         centroids = (
             label_mean_centroids(corpus, id_col, vec_col, label_col)
             .select(F.col(label_col).alias("cell"), "centroid")
-            .localCheckpoint()
+            .transform(materialize, eager=True)
         )
     assigned = (
         _ranked_cells(corpus, centroids, id_col, vec_col)
@@ -425,7 +426,7 @@ def ivf_forget_vectors(
     ids = (
         deleted.select(F.col(deleted.columns[0]).alias(id_col))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize, eager=True)
     )
     per_cell = (
         assignments.join(F.broadcast(ids.withColumn("_del", F.lit(1))), id_col, "left")

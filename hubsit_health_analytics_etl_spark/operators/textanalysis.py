@@ -11,6 +11,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+from .concurrency import materialize as _materialize
+
 # Tiny per-language stopword lists for the n-gram/stopword-hit
 # language-ID heuristic. Deliberately small + deterministic (the
 # oracle replicates them verbatim).
@@ -935,7 +937,7 @@ def corpus_term_stats(docs, text_col: str = "text", materialize: bool = False):
     At 100 TB tf/dl/dfreq are the persisted vocabulary-index family —
     built once per ingest, reused per query.
 
-    ``materialize=True`` eager-localCheckpoints tf first, for callers
+    ``materialize=True`` eagerly materializes tf first, for callers
     that consume the four frames in SEPARATE actions (e.g. persisting
     each as its own parquet table): ReuseExchange only shares the tf
     exchange within one plan, so without it every action re-explodes
@@ -948,7 +950,7 @@ def corpus_term_stats(docs, text_col: str = "text", materialize: bool = False):
         F.count(F.lit(1)).cast("bigint").alias("tf_l")
     )
     if materialize:
-        tf = tf.localCheckpoint(eager=True)
+        tf = _materialize(tf, eager=True)
     dl = tf.groupBy("doc_id").agg(F.sum("tf_l").cast("bigint").alias("dl_l"))
     dfreq = tf.groupBy("token").agg(
         F.count(F.lit(1)).cast("bigint").alias("df_l")

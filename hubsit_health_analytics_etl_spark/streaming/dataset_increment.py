@@ -76,6 +76,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from ..operators.concurrency import materialize
+
 # every member the sink maintains: the 19 standing artifacts plus the
 # appended raw corpus and the per-generation training dump
 DOCS_MEMBER = "docs"
@@ -157,7 +159,7 @@ def llm_dataset_stream_sink(
         spark = batch.sparkSession
         # the sink re-reads the batch many times (fingerprint probe,
         # signatures, grams, annotations, word table) — pin it once
-        batch = batch.localCheckpoint()
+        batch = materialize(batch, eager=True)
         cur = catalog_current(cat_root)
         if cur is not None:
             if read_catalog(cat_root)["extra"].get("batch_id") == batch_id:

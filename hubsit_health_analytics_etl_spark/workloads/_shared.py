@@ -32,6 +32,7 @@ from ..operators.dedup import (
     simhash32,
     simhash_candidate_pairs,
 )
+from ..operators.concurrency import materialize
 from ..operators.multimodal import documents_as_media, extract_features
 from ..operators.similarity import (
     HYPERPLANES,
@@ -88,6 +89,7 @@ __all__ = [
     "lang_id",
     "load_table",
     "lsh_bucket_topk",
+    "materialize",
     "minhash_candidates",
     "ngram_containment_pairs",
     "ngram_jaccard_pairs",

@@ -337,12 +337,9 @@ def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell boundaries."""
     brute = q_ann_bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
     # brute feeds BOTH the hits join and the n_total denominator — a
-    # lazy localCheckpoint materializes the ~100-row exact answer once
+    # lazy materialization holds the ~100-row exact answer once
     # instead of executing the full brute-force pipeline per consumer
-    try:
-        brute = brute.localCheckpoint(eager=False)
-    except Exception:
-        brute = brute.cache()
+    brute = materialize(brute)
     approx = q_ann_lsh_topk(spark, sf_dir).select(
         F.lit("lsh").alias("method"), "query_id", "neighbor_id"
     ).unionByName(
@@ -510,17 +507,11 @@ def q_ann_kmeans_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
 
-    def _brute():
-        # the exact baseline's checkpoint materialization is
-        # independent of the KMeans fit — overlap the two job
-        # cascades (guide §2.6)
-        try:
-            return brute_p.localCheckpoint(eager=False)
-        except Exception:
-            return brute_p.cache()
-
+    # the exact baseline's materialization is independent of the
+    # KMeans fit — overlap the two job cascades (guide §2.6)
     brute, cents = run_concurrent(
-        _brute, lambda: kmeans_centroids(emb, KMEANS_IVF_CELLS)
+        lambda: materialize(brute_p),
+        lambda: kmeans_centroids(emb, KMEANS_IVF_CELLS),
     )
     approx = ivf_topk(emb, ANN_K, query_filter=qf, centroids=cents).select(
         "query_id", "neighbor_id"

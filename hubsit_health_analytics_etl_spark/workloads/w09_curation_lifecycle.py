@@ -533,7 +533,7 @@ def q_ann_forget_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one materialization of the assignments feeds both index writes
     # and the forget pass; the two writes are independent — overlap
     # them (guide §2.6)
-    assigned = assigned.localCheckpoint(eager=False)
+    assigned = materialize(assigned)
     run_concurrent(
         lambda: write_parquet(cents, cpath),
         lambda: write_parquet(assigned, apath, partition_by=["cell"]),

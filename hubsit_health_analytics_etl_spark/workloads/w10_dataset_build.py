@@ -238,13 +238,12 @@ def _llm_dataset_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scrubbed corpus is a real stage boundary (it IS the
         # cleaned-text dump) and is consumed three times downstream
         # (word explode + token-count join-back) — materialize it once
-        # (localCheckpoint, the CC lineage-truncation tool) instead of
-        # re-running curate+dedup+scrub per consumer; at cluster scale
-        # this is the checkpoint-to-durable-storage point (SCALING.md
-        # "Iterative jobs" posture).
+        # instead of re-running curate+dedup+scrub per consumer; with a
+        # session checkpoint directory this lands on durable storage
+        # (SCALING.md "Iterative jobs").
         return scrub_duplicate_spans(
             _spread(docs).join(sel, "doc_id"), k=SPAN_GRAM
-        ).localCheckpoint()
+        ).transform(materialize, eager=True)
 
     # 6: trained-tokenizer counts of the scrubbed text (frozen merges,
     # applied map-only over the distinct-word dimension). The trainer

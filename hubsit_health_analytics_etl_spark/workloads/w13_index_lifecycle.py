@@ -962,7 +962,7 @@ def q_theta_returning_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a-side, b-side, AND the pair frame — materialize it once so the
     # raw-orders build pipeline is not re-planned per consumer (in a
     # real pipeline this is the persisted index theta_new_batch reads)
-    sk = _theta_month_sketch(spark, sf_dir).localCheckpoint()
+    sk = _theta_month_sketch(spark, sf_dir).transform(materialize, eager=True)
     # the sketch index is ~80 rows — a single-partition rank window
     # over it is driver-trivial (the raw data never sees a window)
     rk = sk.withColumn("mrk", F.row_number().over(Window.orderBy("month")))

@@ -123,7 +123,7 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-part array — no self-join, no second scan (warm, at
     sf0.1 on local[4]: 1.49 s vs 1.94 s for the self-join; a tie at
     sf0.01 in a fresh JVM). Returned behind a
-    lazy localCheckpoint (~4k rows at every fixture SF): the first
+    lazy materialize (~4k rows at every fixture SF): the first
     action materializes it, and edges, degrees, seeds and every round
     after that read cached blocks, so the aggregation runs once per
     query, not once per consumer."""
@@ -141,7 +141,7 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= TRI_MIN_SUPPORT)
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
 
 
@@ -837,7 +837,7 @@ def q_related_parts_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = (
         copurchase_seeds(spark, sf_dir, und)
         .select(F.col("node").alias("seed"))
-        .localCheckpoint()
+        .transform(materialize, eager=True)
     )
     pr = personalized_page_rank(edges, seeds, n_iter=PR_ITER)
     ranked = top_k(

@@ -259,11 +259,9 @@ def q_retrieval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     position discounts are shared literal micro-constants, ndcg_u6 =
     (dcg·10⁶) div idcg. The ~100-row exact answer materializes once
     and feeds both the gain join and the per-query IDCG."""
-    brute = q_ann_bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id", "rank")
-    try:
-        brute = brute.localCheckpoint(eager=False)
-    except Exception:
-        brute = brute.cache()
+    brute = q_ann_bruteforce_topk(spark, sf_dir).select(
+        "query_id", "neighbor_id", "rank"
+    ).transform(materialize)
     rel_case = _NDCG_REL_CASE.replace("brank", "rank").replace("WHEN", "when")
     gains = brute.select(
         "query_id",

@@ -605,7 +605,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the customer aggregate feeds both the anchor-date scalar and the
     # scoring pass: materialize it once (|customers|-sized) so the
     # orders scan under it runs once
-    c = c.localCheckpoint(eager=False)
+    c = materialize(c)
     g = c.agg(F.max("last_d").alias("gmax"))
     s = c.crossJoin(F.broadcast(g)).select(
         "o_custkey", "f_orders", "m_c",
@@ -1109,7 +1109,7 @@ def q_daily_revenue_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the day series feeds five consumers (anchor, both pair
         # sides, OLS, n_days): materialize the ≤ #calendar-days rows
         # once so the orders scan under it runs once
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     m = d.agg(F.min("day").alias("d0"))
     x = d.crossJoin(F.broadcast(m)).select(

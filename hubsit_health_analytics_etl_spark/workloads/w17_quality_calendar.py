@@ -100,11 +100,9 @@ def q_markov_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merged affected stream is (affected users' history) ∪ batch —
     # materialize both once: the returned plan reads the index, the
     # batch and the affected slice, never the corpus again
-    batch = batch.localCheckpoint(eager=False)
+    batch = materialize(batch)
     affected = batch.select("user_id").distinct()
-    corpus_aff = corpus.join(affected, "user_id", "left_semi").localCheckpoint(
-        eager=False
-    )
+    corpus_aff = corpus.join(affected, "user_id", "left_semi").transform(materialize)
     old = _markov_counts(corpus_aff)
     new = _markov_counts(corpus_aff.unionByName(batch))
     return _markov_maintain(idx, old, new)
@@ -143,9 +141,7 @@ def q_markov_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows included) materializes once; old counts read it whole, new
     # counts read its kept subset — the corpus is never re-scanned
     affected = events.filter(is_del).select("user_id").distinct()
-    events_aff = events.join(affected, "user_id", "left_semi").localCheckpoint(
-        eager=False
-    )
+    events_aff = events.join(affected, "user_id", "left_semi").transform(materialize)
     old = _markov_counts(events_aff)
     new = _markov_counts(events_aff.filter(~is_del))
     return _markov_maintain(idx, old, new)
@@ -310,7 +306,7 @@ def q_part_name_reciprocal_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rk") == 1)
         .drop("rk")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     y = best.select(
         F.col("n").alias("yn"), F.col("m").alias("ym")
@@ -387,7 +383,7 @@ def q_segment_priority_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("pri"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     r = o.groupBy("seg").agg(F.sum("obs").cast("bigint").alias("r_tot"))
     c = o.groupBy("pri").agg(F.sum("obs").cast("bigint").alias("c_tot"))
@@ -479,7 +475,7 @@ def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = o.groupBy("o_custkey").agg(
         F.min(F.trunc("d", "month")).alias("cm")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     sz = c.groupBy("cm").agg(F.count(F.lit(1)).cast("bigint").alias("cohort_n"))
     a = o.join(c, "o_custkey").select(
         "cm",
@@ -871,7 +867,7 @@ def q_doc_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(load_table(spark, sf_dir, "documents"))
     g = docs.select(
         "doc_id", F.explode(shingles_from_text("text", 3)).alias("gram")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     df = g.groupBy("gram").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     j = g.join(df, "gram").select(
         "doc_id",
@@ -1072,7 +1068,7 @@ def q_user_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "*",
         F.row_number().over(wu.orderBy("ad", "event_id")).alias("rk"),
         F.count(F.lit(1)).over(wu).alias("n"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     mad = r2.groupBy("user_id").agg(
         F.expr("cast(max(case when rk = (n + 1) div 2 then ad end) as bigint)")
         .alias("mad_c")
@@ -1179,7 +1175,7 @@ def q_forecast_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     months = orders.select(
         F.date_format("o_orderdate", "yyyy-MM").alias("m")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct().transform(materialize)
     mr = months.select(
         "m",
         F.row_number().over(Window.orderBy("m")).alias("rk"),
@@ -1211,7 +1207,7 @@ def q_forecast_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
         u.filter(F.col("rev_c").isNotNull() & F.col("fc").isNotNull())
         .crossJoin(F.broadcast(cut))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     calq = v.filter(F.col("m") <= F.col("cutoff")).select(
         "model", (F.col("rev_c") - F.col("fc")).alias("res")
@@ -1310,7 +1306,7 @@ def q_copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     da = deg.select(F.col("node").alias("src"), F.col("d").alias("x"))
     db = deg.select(F.col("node").alias("dst"), F.col("d").alias("y"))
     p = e.join(F.broadcast(da), "src").join(F.broadcast(db), "dst")

@@ -161,19 +161,17 @@ def _scrub_splice(spark, docs, paths, sel_old, sel_new, arts=None, delta=None):
     add_grams = _doc_grams(
         docs.join(bc(added), "doc_id").repartition(n_part, "doc_id"),
         SPAN_GRAM,
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     rm_post = spost.join(bc(removed), "doc_id", "left_semi")
     g_aff = (
         add_grams.select("gh")
         .unionByName(rm_post.select("gh"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     # ALL standing holders of affected grams (the df statistic needs
     # every posting of a changed gram, not just the delta's rows)
-    std_aff_pos = spost.join(bc(g_aff), "gh", "left_semi").localCheckpoint(
-        eager=False
-    )
+    std_aff_pos = spost.join(bc(g_aff), "gh", "left_semi").transform(materialize)
     # ADVICE r16 medium: the affected-holder slice is HOLDER-count
     # bounded, not batch-bounded — span-gram postings carry no df cap,
     # so ONE boilerplate gram in the batch makes this slice (and every
@@ -189,7 +187,7 @@ def _scrub_splice(spark, docs, paths, sel_old, sel_new, arts=None, delta=None):
     aff_pos = (
         std_aff_pos.join(bc(removed), "doc_id", "left_anti")
         .unionByName(add_grams)
-        .localCheckpoint(eager=False)  # consumers: owners_aff + cut_aff
+        .transform(materialize)  # consumers: owners_aff + cut_aff
     )
     owners_aff = (
         aff_pos.select("gh", "doc_id")
@@ -203,7 +201,7 @@ def _scrub_splice(spark, docs, paths, sel_old, sel_new, arts=None, delta=None):
         aff_pos.join(bc(owners_aff), "gh")
         .filter(F.col("doc_id") != F.col("owner"))
         .select("doc_id", "pos")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     std_cut = rd(paths["cut"])
     aff_positions = std_aff_pos.select("doc_id", "pos")
@@ -233,7 +231,7 @@ def _scrub_splice(spark, docs, paths, sel_old, sel_new, arts=None, delta=None):
         sel_new.join(bch(cut_diff_docs), "doc_id", "left_semi")
         .union(added.select("doc_id"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     cut_changed = (
         std_cut.join(bch(changed), "doc_id", "left_semi")
@@ -244,7 +242,7 @@ def _scrub_splice(spark, docs, paths, sel_old, sel_new, arts=None, delta=None):
         docs.join(bch(changed), "doc_id"),
         cut_changed,
         SPAN_GRAM,
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     # standing skept/dwc cover exactly sel_old's docs, so ⋉ sel_new
     # ≡ anti removed — a broadcast-probed scan, never a corpus shuffle
     skept_new = (
@@ -690,7 +688,7 @@ def q_llm_dataset_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(bpe_word_table(_spread(batch)))
             .groupBy("word")
             .agg(F.sum("n").alias("n"))
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         return rwf_union, bpe_train_merges_from_words(rwf_union, BPE_MERGES)
 
@@ -950,7 +948,7 @@ def _splice_selection(spark, docs, paths, batch, arts=None, delta=None):
         .unionByName(relabelled.select(F.col("node").alias("doc_id")))
         .unionByName(contam_delta_docs)
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     ann_A = rd(paths["ann"]).join(bc(A), "doc_id").unionByName(ann_batch)
     labels_A = relabelled.unionByName(
@@ -1164,7 +1162,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     is_del = hash_bucket("doc_id", salt="forget") < LLM_FORGET_PCT
     deleted = docs.filter(is_del)
-    del_ids = deleted.select("doc_id").localCheckpoint(eager=False)
+    del_ids = deleted.select("doc_id").transform(materialize)
     bc = F.broadcast
 
     # 1. annotations need no materialized splice: deletion only REMOVES
@@ -1183,13 +1181,12 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         aff_fp = (
             deleted.select(fingerprint("text").alias("fp")).distinct()
         )
-        aff_members = members.join(bc(aff_fp), "fp", "left_semi").localCheckpoint(
-            eager=False  # consumers: old_rep, surv_aff (member index scan ×1)
-        )
+        # consumers: old_rep, surv_aff (member index scan ×1)
+        aff_members = members.join(bc(aff_fp), "fp", "left_semi").transform(materialize)
         old_rep = aff_members.groupBy("fp").agg(F.min("doc_id").alias("old_rep"))
         surv_aff = aff_members.join(del_ids, "doc_id", "left_anti")
         new_rep = surv_aff.groupBy("fp").agg(F.min("doc_id").alias("new_rep"))
-        rep_map = old_rep.join(new_rep, "fp", "left").localCheckpoint(eager=False)
+        rep_map = old_rep.join(new_rep, "fp", "left").transform(materialize)
         renames = rep_map.filter(
             F.col("new_rep").isNotNull() & (F.col("old_rep") != F.col("new_rep"))
         )
@@ -1214,7 +1211,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .drop("new_rep")
             )
 
-        bands_new = _remap_posts(rd(paths["bands"])).localCheckpoint(eager=False)
+        bands_new = _remap_posts(rd(paths["bands"])).transform(materialize)
         sh_new = _remap_posts(rd(paths["shingles"]))
 
         ex = rd(paths["exact_edges"])
@@ -1240,7 +1237,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             rd(paths["bucket_sizes"]),
             rd(paths["bands"]).join(bc(vanished), "doc_id", "left_semi"),
             MINHASH_BUCKET_CAP,
-        ).localCheckpoint(eager=False)  # consumers: cand-id probe + verify join
+        ).transform(materialize)  # consumers: cand-id probe + verify join
         jac = F.size(F.array_intersect("hs_a", "hs_b")) / F.size(
             F.array_union("hs_a", "hs_b")
         ).cast("double")
@@ -1251,9 +1248,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(add_cand.select(F.col("doc_b").alias("doc_id")))
             .distinct()
         )
-        sh_cand = sh_new.join(bc(ac_ids), "doc_id", "left_semi").localCheckpoint(
-            eager=False
-        )
+        sh_cand = sh_new.join(bc(ac_ids), "doc_id", "left_semi").transform(materialize)
         added_mh = (
             add_cand.join(
                 bc(
@@ -1274,7 +1269,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
             .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
             .select("doc_a", "doc_b")
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
 
         mh = rd(paths["mh_edges"])
@@ -1322,19 +1317,19 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(added_mh.select(F.col("doc_a").alias("node")))
             .unionByName(added_mh.select(F.col("doc_b").alias("node")))
             .distinct()
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         # deletion-bounded probes of the label scan, never a shuffle of it
         affected_comps = (
             labels.join(bc(touched), "node")
             .select("component")
             .distinct()
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         affected = labels.join(bc(affected_comps), "component")
         survivors_aff = affected.select("node").join(
             bc(del_ids.withColumnRenamed("doc_id", "node")), "node", "left_anti"
-        ).localCheckpoint(eager=False)
+        ).transform(materialize)
         # materialize the (affected-size) subgraph before the iterative
         # re-label — connected_components re-joins its edges every round
         sub_edges = (
@@ -1348,7 +1343,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_b",
                 "left_semi",
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         sub_labels = connected_components(sub_edges, "doc_a", "doc_b")
         relabelled = (
@@ -1357,7 +1352,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "node",
                 F.coalesce(F.col("component"), F.col("node")).alias("component"),
             )
-            .localCheckpoint(eager=False)  # consumers: A_f, labels_A probe
+            .transform(materialize)  # consumers: A_f, labels_A probe
         )
         return relabelled
 
@@ -1371,7 +1366,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         # probed by broadcast-small deletion-touched gram sets
         del_cnt = del_cg.groupBy("g").agg(
             F.count(F.lit(1)).alias("n_del")
-        ).localCheckpoint(eager=False)
+        ).transform(materialize)
         std_cnt_del = rd(paths["decon_counts"]).join(bc(del_cnt.select("g")), "g")
         newly_under_g = (
             del_cnt.join(bc(std_cnt_del), "g", "left")
@@ -1388,7 +1383,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("occ_new") > 0)
             )
             .select("g")
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         # bench grams only SHRINK under deletion: the vanished set (eval
         # doc-count decremented to zero) is deletion-bounded, and standing
@@ -1399,7 +1394,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .groupBy("g")
             .agg(F.count(F.lit(1)).alias("n_del"))
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         std_bench_del = rd(paths["bench_grams"]).join(
             bc(del_bg_cnt.select("g")), "g"
@@ -1410,7 +1405,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce(F.col("n_eval"), F.lit(0)) - F.col("n_del") <= 0
             )
             .select("g")
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         under_bench = (
             rd(paths["bench_grams"])
@@ -1423,7 +1418,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(bc(under_bench), "g", "left_semi")
             .join(bc(del_ids), "doc_id", "left_anti")
             .select("doc_id", "g")
-            .localCheckpoint(eager=False)  # consumers: Δ docs, contaminated_A
+            .transform(materialize)  # consumers: Δ docs, contaminated_A
         )
         # contamination can flip ONLY for docs gaining a reinstated hit or
         # losing one to a vanished bench gram (a deleted doc's own hits
@@ -1454,7 +1449,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("word")
             .agg(F.sum("n").alias("n"))
             .filter(F.col("n") > 0)
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         return rwf_new, bpe_train_merges_from_words(rwf_new, BPE_MERGES)
 
@@ -1476,11 +1471,10 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(relabelled.select(F.col("node").alias("doc_id")))
         .unionByName(contam_delta_docs)
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
-    sel_eval = A_f.join(bc(del_ids), "doc_id", "left_anti").localCheckpoint(
-        eager=False  # the surviving A_f docs the selection re-evaluates
-    )
+    # the surviving A_f docs the selection re-evaluates
+    sel_eval = A_f.join(bc(del_ids), "doc_id", "left_anti").transform(materialize)
     ann_A = rd(paths["ann"]).join(bc(sel_eval), "doc_id", "left_semi")
     labels_A = relabelled.unionByName(
         labels.join(

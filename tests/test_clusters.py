@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+from contextlib import contextmanager
+
 import pyspark.sql.functions as F
 
 
@@ -195,14 +198,29 @@ def test_incremental_clusters_equal_full_recompute(spark):
     assert d[20] == 20 and d[21] == 20      # untouched component passed through
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """connected_components(checkpoint_dir=...) must run the loop on
-    RELIABLE df.checkpoint() — per-round label frames persisted under
-    the given directory (what survives executor loss at 100 TB; the
-    localCheckpoint default is bench-only, SCALING.md "Iterative
-    jobs") — and produce exactly the default path's labels."""
-    import os
+@contextmanager
+def _session_checkpoint_dir(spark, path):
+    """Set the session checkpoint directory for the block, then clear
+    it: a directory left on the shared session would turn every later
+    test's materializations reliable."""
+    spark.sparkContext.setCheckpointDir(path)
+    try:
+        yield
+    finally:
+        spark.sparkContext._jsc.sc().setCheckpointDir(None)
+    assert spark.sparkContext.getCheckpointDir() is None
 
+
+def _files_under(path):
+    return [os.path.join(dp, f) for dp, _, fs in os.walk(path) for f in fs]
+
+
+def test_connected_components_reliable_checkpoint(spark, tmp_path):
+    """With a session checkpoint directory, connected_components runs
+    its loop on RELIABLE df.checkpoint() — per-round label frames
+    persisted under that directory (what survives executor loss at
+    100 TB; SCALING.md "Iterative jobs") — and produces exactly the
+    localCheckpoint path's labels."""
     from hubsit_health_analytics_etl_spark.operators.clusters import (
         connected_components,
     )
@@ -217,19 +235,48 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
         for r in connected_components(edges).collect()
     }
     ckpt = str(tmp_path / "cc_ckpt")
-    got = {
-        (r.node, r.component)
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
-    }
+    with _session_checkpoint_dir(spark, ckpt):
+        got = {
+            (r.node, r.component)
+            for r in connected_components(edges).collect()
+        }
     assert got == expected
     assert {(1, 1), (4, 1), (10, 10), (22, 20)} <= got
-    # reliable checkpoints actually landed on disk under the dir
-    files = [
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(ckpt)
-        for f in fs
-    ]
-    assert files, "no reliable checkpoint files written"
+    assert _files_under(ckpt), "no reliable checkpoint files written"
+
+
+def test_forget_documents_reliable_checkpoint(spark, tmp_path):
+    """The session policy reaches the incremental paths too:
+    forget_documents (and the connected_components it calls) writes
+    reliable checkpoints under the session directory and returns the
+    localCheckpoint path's labels — deleting cut vertex 3 splits
+    {1,2,3,4,5} into {1,2} and {4,5}."""
+    from hubsit_health_analytics_etl_spark.operators.clusters import (
+        forget_documents,
+    )
+
+    labels = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)],
+        "node long, component long",
+    )
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "doc_a long, doc_b long"
+    )
+    deleted = spark.createDataFrame([(3,)], "node long")
+
+    def run():
+        return {
+            (r.node, r.component)
+            for r in forget_documents(labels, edges, deleted).collect()
+        }
+
+    expected = run()
+    ckpt = str(tmp_path / "forget_ckpt")
+    with _session_checkpoint_dir(spark, ckpt):
+        got = run()
+    assert got == expected
+    assert got == {(1, 1), (2, 1), (4, 4), (5, 4), (10, 10), (11, 10)}
+    assert _files_under(ckpt), "no reliable checkpoint files written"
 
 
 def test_leakage_safe_split_keeps_duplicates_same_side(spark):

@@ -1,10 +1,12 @@
-"""Source-level lint gate over the workload package (VERDICT r13 #6):
-no dev-box partition-count literals in query bodies — cluster fan-out
-comes from defaultParallelism/AQE, and deliberate file-count scenarios
-carry an explicit '# lint: fixture-files' justification marker."""
+"""Source-level lint gates over the package: no dev-box partition-count
+literals in query bodies (VERDICT r13 #6) — cluster fan-out comes from
+defaultParallelism/AQE, and deliberate file-count scenarios carry an
+explicit '# lint: fixture-files' justification marker; and every
+checkpoint goes through the one ``materialize`` primitive."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
 
@@ -64,3 +66,28 @@ def test_lint_rule_fires_on_literal_and_respects_marker() -> None:
     )
     # commented-out code does not fire
     assert lint_source_fixture_constants("# df.repartition(32)\n") == []
+
+
+def test_checkpoints_only_inside_materialize() -> None:
+    """``operators/concurrency.py::materialize`` is the package's only
+    ``localCheckpoint``/``checkpoint`` call, so the session's
+    local-vs-reliable policy reaches every materialization."""
+    sites: list[str] = []
+    for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        # innermost enclosing function: ast.walk is breadth-first, so a
+        # nested def overwrites its parent's entry
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                owner.update((node, fn.name) for node in ast.walk(fn))
+        sites += [
+            f"{os.path.relpath(path, PKG)}::{owner.get(node)}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "checkpoint")
+        ]
+    # one reliable and one local branch
+    assert sites == ["operators/concurrency.py::materialize"] * 2, sites
