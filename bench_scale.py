@@ -45,6 +45,8 @@ import time
 
 import pyspark.sql.functions as F
 
+from hubsit_health_analytics_etl_spark.sources.parquet import spread
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 
 # the iterative / index families VERDICT r12 #2 names, all of whose
@@ -286,7 +288,6 @@ def lifecycle_fixed_batch(spark, sf_dir: str) -> dict:
     from hubsit_health_analytics_etl_spark.operators.textanalysis import (
         bpe_word_table,
     )
-    from hubsit_health_analytics_etl_spark.operators.dedup import _spread
 
     docs = load_table(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") < FIXED_BATCH_DOCS
@@ -312,7 +313,7 @@ def lifecycle_fixed_batch(spark, sf_dir: str) -> dict:
     t1 = time.perf_counter()
     rwf_union = (
         rd(paths["rwf"])
-        .unionByName(bpe_word_table(_spread(batch)))
+        .unionByName(bpe_word_table(spread(batch)))
         .groupBy("word")
         .agg(F.sum("n").alias("n"))
         .localCheckpoint(eager=False)

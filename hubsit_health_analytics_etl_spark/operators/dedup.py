@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from .concurrency import materialize
 from .textanalysis import fingerprint
 
+from ..sources.parquet import spread
 from .scaleparams import bucket_cap_for
 
 N_MINHASH = 16  # signature length (recall/precision knob, not a load knob)
@@ -87,21 +88,6 @@ def band_keys(n: int = N_MINHASH, rows: int = BAND_ROWS) -> list[Column]:
             expr = f"({expr} * {BAND_MIX} + mh_{b * rows + r})"
         out.append(F.expr(f"cast({expr} as bigint)").alias(f"band_{b}"))
     return out
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Fan a narrow input out before expensive per-row compute.
-    Small corpora often arrive as one parquet row-group → one task; the
-    md5/shingle work must spread across cores. CONDITIONAL: an input
-    that already has ≥ shuffle-partitions splits (every real corpus
-    scan at scale) passes through untouched — repartitioning it would
-    be a full-corpus shuffle purely to redo what the scan's split
-    planning already did."""
-    sess = df.sparkSession
-    n = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
 
 
 def exact_dup_representatives(
@@ -191,14 +177,12 @@ def minhash_candidates(
         # on the fingerprint with an explicit count (REPARTITION_BY_NUM,
         # which AQE never coalesces) already satisfies the group-by's
         # distribution, so the representatives leave it spread over
-        # shuffle-partitions tasks — no _spread probe, whose
-        # df.rdd.getNumPartitions() would execute the exchange as an
-        # extra job before the first materialization
+        # shuffle-partitions tasks
         n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
         fp = docs.withColumn("fp", fingerprint(text_col)).repartition(n, "fp")
         docs = _fingerprint_representatives(fp, id_col, text_col)
     else:
-        docs = _spread(docs)
+        docs = spread(docs)
     sh = docs.select(F.col(id_col), shingles_from_text(text_col).alias("sh"))
     sig = sh.select(id_col, shingle_base_hash("sh").alias("hs")).select(
         id_col, *minhash_signature("hs")
@@ -269,7 +253,7 @@ def minhash_signature_index(
       cardinalities; ~2^61 space makes collisions negligible, and the
       SQL oracle hashes identically so parity stays exact).
     """
-    sh = _spread(docs).select(F.col(id_col), shingles_from_text(text_col).alias("sh"))
+    sh = spread(docs).select(F.col(id_col), shingles_from_text(text_col).alias("sh"))
     sig = sh.select(id_col, shingle_base_hash("sh").alias("h32")).select(
         id_col, *minhash_signature("h32")
     )
@@ -529,7 +513,7 @@ def _shingle_intersections(
     for boilerplate shingles shared by more than cap docs (O(m²) join
     rows on one reducer otherwise), with Observation-auditable drop
     counts."""
-    sh = _spread(docs).select(F.col(id_col), shingles_from_text(text_col).alias("sh"))
+    sh = spread(docs).select(F.col(id_col), shingles_from_text(text_col).alias("sh"))
     inv = sh.select(
         id_col,
         F.size("sh").alias("n_sh"),
@@ -678,7 +662,7 @@ def simhash_candidate_pairs(
     """
     if pre_exact_dedup:
         docs = exact_dup_representatives(docs, id_col, text_col)
-    sig = _spread(docs).select(F.col(id_col), simhash32(text_col).alias("simhash"))
+    sig = spread(docs).select(F.col(id_col), simhash32(text_col).alias("simhash"))
     banded = sig.select(
         F.col(id_col),
         F.col("simhash"),
@@ -1041,7 +1025,7 @@ def incremental_containment(
     scanning the index). Output: (doc_id, contained_in, n_inter,
     containment_u6) with containment = |sh(new) ∩ sh(old)| / |sh(new)|
     in exact int64 micro-units (ngram_containment_pairs posture)."""
-    sh = _spread(new_docs).select(
+    sh = spread(new_docs).select(
         F.col(id_col), shingles_from_text(text_col).alias("sh")
     )
     batch = sh.select(
@@ -1115,7 +1099,7 @@ def jaccard_prefix_filter_pairs(
     losslessness cryptographically."""
     from pyspark.sql import Window
 
-    sh = _spread(docs).select(F.col(id_col), shingles_from_text(text_col).alias("sh"))
+    sh = spread(docs).select(F.col(id_col), shingles_from_text(text_col).alias("sh"))
     inv = sh.select(
         id_col,
         F.size("sh").alias("n_sh"),

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources.parquet import spread
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -54,16 +56,6 @@ FEATURE_SCHEMA = StructType(
         StructField("feat_1", LongType()),
     ]
 )
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Spread a narrow single-split input across the configured
-    parallelism before the Python stage (real media tables arrive
-    multi-split; this is a local-fixture no-op at scale)."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    if df.rdd.getNumPartitions() < n:
-        df = df.repartition(n)
-    return df
 
 
 def decode_image(payload: bytes):  # pragma: no cover - container lacks PIL
@@ -95,7 +87,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     (stub) decode kernel, yields feature frames — zero driver
     involvement, no shuffle."""
 
-    media = _fan_out(media)
+    media = spread(media)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -136,7 +128,7 @@ def resize_images(media: DataFrame, max_side: int = 224) -> DataFrame:
     sha256-tagged original — swap ``_resize_one`` for a real
     ``PIL.Image.resize`` and the schema/batching/filter plumbing all
     stands."""
-    imgs = _fan_out(media.filter(F.col("kind") == "image"))
+    imgs = spread(media.filter(F.col("kind") == "image"))
 
     def _dims(payload: bytes, w, h) -> tuple[int, int]:
         # nulls arrive as NaN through Arrow — treat any missing or
@@ -204,7 +196,7 @@ def sample_frames(
     length; each "frame" is the sha256 of payload‖frame_idx (hex) —
     deterministic, cross-engine reproducible, and exactly the shape a
     real extractor yields (media_id, frame_idx, ts_ms, frame bytes)."""
-    vids = _fan_out(media.filter(F.col("kind") == "video"))
+    vids = spread(media.filter(F.col("kind") == "video"))
     ms_per_frame = 1000 // fps
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -281,7 +273,7 @@ def segment_audio(
     the sha256 of payload‖'w'‖idx — deterministic and replicated by
     the DuckDB oracle, with the real decoder seam being the body of
     ``kernel`` only."""
-    auds = _fan_out(media.filter(F.col("kind") == "audio"))
+    auds = spread(media.filter(F.col("kind") == "audio"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

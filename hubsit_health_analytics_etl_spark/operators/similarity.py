@@ -23,6 +23,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..sources.parquet import spread
 from .concurrency import materialize
 from .scaleparams import ivf_cells_for, lsh_planes_for
 
@@ -157,8 +158,6 @@ def brute_force_topk(
     makes misuse fail loudly instead of OOMing executors: the guard
     probe is ``limit(max+1).count()``, cheap even when the input is
     huge. Pass ``None`` to waive (e.g. a caller that just counted)."""
-    from .dedup import _spread
-
     if max_queries is not None:
         probe = queries.limit(int(max_queries) + 1).count()
         if probe > int(max_queries):
@@ -176,7 +175,7 @@ def brute_force_topk(
         F.col(vec_col).alias("q_vec"),
         norm_expr(vec_col).alias("q_norm"),
     )
-    c = _spread(corpus).select(
+    c = spread(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         norm_expr(vec_col).alias("c_norm"),
@@ -221,9 +220,7 @@ def lsh_bucket_topk(
     query set — including ``query_filter=None``, the all-vectors
     self-search — silently keeps the scalable shape instead: a
     shuffled equi-join on the bucket id."""
-    from .dedup import _spread
-
-    bucketed = _spread(corpus).select(
+    bucketed = spread(corpus).select(
         F.col(id_col),
         F.col(vec_col),
         lsh_bucket_expr(vec_col, n_rows=n_rows).alias("bucket"),
@@ -342,10 +339,8 @@ def _ranked_cells(
     identical across engines/partitionings."""
     from pyspark.sql import Window
 
-    from .dedup import _spread
-
     cents = centroids.select("cell", "centroid", norm_expr("centroid").alias("c_nrm"))
-    base = _spread(vectors).select(id_col, vec_col, norm_expr(vec_col).alias("nrm"))
+    base = spread(vectors).select(id_col, vec_col, norm_expr(vec_col).alias("nrm"))
     scored = base.crossJoin(F.broadcast(cents)).select(
         id_col,
         vec_col,

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+from ..sources.parquet import spread
 from .concurrency import materialize as _materialize
 
 # Tiny per-language stopword lists for the n-gram/stopword-hit
@@ -311,9 +312,9 @@ def decon_grams(
     expression: per-gram occurrence counts over disjoint doc slices
     are additive, and the (g, doc_id) postings table is the standing
     artifact a new eval slice probes without re-gramming the corpus."""
-    from .dedup import _spread, shingles_from_text
+    from .dedup import shingles_from_text
 
-    return _spread(docs).select(
+    return spread(docs).select(
         F.col(id_col), shingles_from_text(text_col, k).alias("sh")
     ).select(
         id_col,

@@ -9,6 +9,8 @@ reference's CSV-everywhere model (/root/reference/src/etl_pipeline.py:85-161).
 from __future__ import annotations
 
 import threading
+from itertools import accumulate
+from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -109,6 +111,34 @@ def read_parquet_immutable(spark: SparkSession, path: str) -> DataFrame:
     with _PLAN_MEMO_LOCK:
         _PLAN_MEMO[key] = (df, fp)
     return df
+
+
+def _row_groups(uri: str) -> int:
+    """Row groups in one parquet file; 1 when pyarrow cannot open it."""
+    import pyarrow.parquet as pq
+
+    u = urlparse(uri)
+    if u.scheme not in ("", "file"):
+        return 1
+    try:
+        return pq.read_metadata(unquote(u.path)).num_row_groups
+    except (OSError, ValueError):  # missing, unreadable, not parquet
+        return 1
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Fan a narrow input out before expensive per-row compute: a small
+    corpus is one parquet row group, read as one task. With ``n`` =
+    ``spark.sql.shuffle.partitions``, ``df.repartition(n)`` when the
+    files behind ``df.inputFiles()`` hold fewer than ``n`` row groups;
+    ``df`` itself otherwise (every corpus scan at scale) and for a
+    frame with no file input. Reads parquet footers only: no job, no
+    physical planning."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    files = df.inputFiles()
+    if not files or any(t >= n for t in accumulate(map(_row_groups, files))):
+        return df
+    return df.repartition(n)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

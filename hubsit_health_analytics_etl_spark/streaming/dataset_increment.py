@@ -77,6 +77,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 
 from ..operators.concurrency import materialize
+from ..sources.parquet import spread
 
 # every member the sink maintains: the 19 standing artifacts plus the
 # appended raw corpus and the per-generation training dump
@@ -150,7 +151,6 @@ def llm_dataset_stream_sink(
             _scrub_splice,
             _splice_selection,
         )
-        from ..operators.dedup import _spread
         from ..operators.textanalysis import bpe_word_table
         from ..workloads.w10_dataset_build import _shard_pack_plan
 
@@ -187,7 +187,7 @@ def llm_dataset_stream_sink(
             )
             arts["rwf"] = (
                 members["rwf"]
-                .unionByName(bpe_word_table(_spread(batch)))
+                .unionByName(bpe_word_table(spread(batch)))
                 .groupBy("word")
                 .agg(F.sum("n").alias("n"))
             )

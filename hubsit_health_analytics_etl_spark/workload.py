@@ -282,13 +282,13 @@ def _prepare_lookup_precomputed(spark: SparkSession, sf_dir: str) -> tuple[str, 
         return got
     import hashlib
     import os
-    import tempfile
 
     from .sources.sinks import write_bucketed_table, write_parquet
+    from .workloads.w02_dedup import _run_scoped_index_dir
 
     tag = hashlib.md5(f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:10]
     table = f"lookup_fact_precomp_{tag}"
-    base = tempfile.mkdtemp(prefix=f"hubsit_lookup_precomp_{tag}_")
+    base = _run_scoped_index_dir(f"lookup_precomp_{tag}")
     lineitem = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     fact = lineitem.join(

@@ -2,8 +2,7 @@
 
 Every per-family module star-imports this header so the split of the
 former single-file EXT workload stays mechanical: same names in scope,
-same constants, same operator imports. ``__all__`` is explicit so the
-underscore helpers (``_spread``) survive the star-import.
+same constants, same operator imports.
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ from ..operators.dedup import (
     SIMHASH_HAMMING_MAX,
     exact_dedup,
     exact_dup_edges,
-    _spread,
     minhash_candidates,
     ngram_containment_pairs,
     ngram_jaccard_pairs,
@@ -49,7 +47,7 @@ from ..operators.textanalysis import (
     token_count_bpe_ish,
     tokens,
 )
-from ..sources.parquet import load_table
+from ..sources.parquet import load_table, spread
 from ..streaming.windows import session_agg, sliding_agg, tumbling_agg
 from ..workload import PREPARES, query
 
@@ -80,7 +78,6 @@ __all__ = [
     "SIMHASH_HAMMING_MAX",
     "STOPWORDS_ALL",
     "SparkSession",
-    "_spread",
     "brute_force_topk",
     "documents_as_media",
     "exact_dedup",
@@ -101,6 +98,7 @@ __all__ = [
     "simhash32",
     "simhash_candidate_pairs",
     "sliding_agg",
+    "spread",
     "sql_lsh_bucket",
     "token_count_bpe_ish",
     "tokens",

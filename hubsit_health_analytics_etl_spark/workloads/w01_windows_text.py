@@ -142,7 +142,7 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic (stopword-hit argmax) vs the labeled lang
     column → confusion counts."""
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     return (
         docs.withColumn("lang_pred", lang_id(tokens("text")))
         .groupBy("lang", "lang_pred")
@@ -246,7 +246,7 @@ def q_corpus_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textanalysis import annotate_documents
 
     docs = load_table(spark, sf_dir, "documents")
-    ann = annotate_documents(_spread(docs))
+    ann = annotate_documents(spread(docs))
     return ann.filter(
         (F.col("lang_pred") == "en")
         & (F.col("quality_score") >= KEEP_MIN_QUALITY)
@@ -276,7 +276,7 @@ def q_corpus_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textanalysis import annotate_documents
 
     docs = load_table(spark, sf_dir, "documents")
-    ann = annotate_documents(_spread(docs))
+    ann = annotate_documents(spread(docs))
     band = (
         F.when(F.col("quality_score") >= 0.6, "high")
         .when(F.col("quality_score") >= 0.4, "mid")
@@ -332,13 +332,12 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup 3-gram ≤ 0.45 — Gopher-flavored thresholds). Map-only: gram
     construction, distinct and the flag are one Catalyst projection
     inside the scan stage."""
-    from ..operators.dedup import _spread
     from ..operators.textanalysis import repetition_fraction, token_count_ws
 
     docs = load_table(spark, sf_dir, "documents")
     d2 = repetition_fraction("text", 2)
     d3 = repetition_fraction("text", 3)
-    return _spread(docs).select(
+    return spread(docs).select(
         "doc_id",
         token_count_ws("text").cast("bigint").alias("n_tokens"),
         d2.alias("dup_2gram_frac"),
@@ -382,11 +381,10 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction over the (synthetically contact-augmented)
     corpus: counts + scrubbed text per doc, all JVM regexp — map-only,
     runs inside the scan stage at any scale."""
-    from ..operators.dedup import _spread
     from ..operators.textanalysis import pii_scrub
 
     docs = load_table(spark, sf_dir, "documents")
-    aug = _spread(docs).select(
+    aug = spread(docs).select(
         "doc_id",
         F.concat(
             F.col("text"),

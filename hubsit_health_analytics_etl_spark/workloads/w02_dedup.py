@@ -7,6 +7,11 @@ via ``workloads/__init__.py`` so the ``@query`` registry is unchanged.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
+
 from ._shared import *  # noqa: F401,F403
 
 
@@ -118,17 +123,22 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEW_BATCH_PCT = 10  # doc_id hash bucket < 10 → the "new" slice
 
 
-def _run_scoped_index_dir(kind: str) -> str:
-    """A fresh, run-private directory for a persisted-index query.
-    Unique per CALL (mkdtemp), so two concurrent drivers / parallel
-    test sessions on one machine can never race overwrite-vs-read on
-    the same index files. A real pipeline passes its own long-lived,
-    run-owned index path instead; these queries re-BUILD the index
-    inside the timed query precisely to measure that write+probe
-    round-trip."""
-    import tempfile
+@functools.cache
+def _run_root() -> str:
+    """Process-scoped parent of every run-scoped dir, removed at exit."""
+    root = tempfile.mkdtemp(prefix="hubsit_run_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
-    return tempfile.mkdtemp(prefix=f"hubsit_{kind}_")
+
+def _run_scoped_index_dir(kind: str) -> str:
+    """A fresh, run-private directory (under ``_run_root``) for a
+    persisted-index query. Unique per CALL, so concurrent drivers never
+    race overwrite-vs-read on the same index files. A real pipeline
+    passes its own long-lived index path instead; these queries
+    re-BUILD the index inside the timed query to measure that
+    write+probe round-trip."""
+    return tempfile.mkdtemp(prefix=f"hubsit_{kind}_", dir=_run_root())
 
 
 def _incremental_dedup_oracle() -> str:
@@ -484,7 +494,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textanalysis import winnowed_fingerprints
 
     docs = load_table(spark, sf_dir, "documents")
-    fps = winnowed_fingerprints(_spread(docs), k=K_WINNOW, w=W_WINNOW)
+    fps = winnowed_fingerprints(spread(docs), k=K_WINNOW, w=W_WINNOW)
     return fps.select("doc_id", F.explode("fingerprints").alias("fp"))
 
 
@@ -509,7 +519,7 @@ def q_winnow_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return winnow_candidate_pairs(
-        _spread(docs),
+        spread(docs),
         k=K_WINNOW,
         w=W_WINNOW,
         min_shared=WINNOW_MIN_SHARED,
@@ -563,7 +573,7 @@ def q_duplicate_text_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ext_operators.py."""
     from ..operators.textanalysis import duplicate_span_report
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     return duplicate_span_report(docs, k=SPAN_GRAM)
 
 
@@ -612,7 +622,7 @@ def q_scrub_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match checks detection AND rewrite end-to-end."""
     from ..operators.textanalysis import scrub_duplicate_spans
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     return scrub_duplicate_spans(docs, k=SPAN_GRAM)
 
 
@@ -683,7 +693,7 @@ def q_spans_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _run_scoped_index_dir("span_gram")
     idx_path = os.path.join(base, "gram_df_index")
     write_parquet(
-        gram_document_frequency(_doc_grams(_spread(corpus), SPAN_GRAM)),
+        gram_document_frequency(_doc_grams(spread(corpus), SPAN_GRAM)),
         idx_path,
     )
     idx = spark.read.parquet(idx_path)
@@ -769,7 +779,7 @@ def q_scrub_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _run_scoped_index_dir("scrub_gram")
     idx_path = os.path.join(base, "gram_owner_index")
     write_parquet(
-        gram_ownership_index(_doc_grams(_spread(corpus), SPAN_GRAM)),
+        gram_ownership_index(_doc_grams(spread(corpus), SPAN_GRAM)),
         idx_path,
     )
     idx = spark.read.parquet(idx_path).withColumnsRenamed(
@@ -826,12 +836,12 @@ def _simhash_oracle() -> str:
 def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document from md5-nibble token hashes —
     near-dup fingerprint whose Hamming neighbors are dedup candidates.
-    _spread fans the single-row-group local fixture across cores before
-    the per-token hash work (no-op cost at real scale, where the
-    source arrives in many splits)."""
+    ``spread`` fans the single-row-group local fixture across cores
+    before the per-token hash work (a no-op at real scale, where the
+    source has at least shuffle-partitions row groups)."""
 
     docs = load_table(spark, sf_dir, "documents")
-    return _spread(docs).select("doc_id", simhash32("text").alias("simhash"))
+    return spread(docs).select("doc_id", simhash32("text").alias("simhash"))
 
 
 def _simhash_pairs_oracle() -> str:

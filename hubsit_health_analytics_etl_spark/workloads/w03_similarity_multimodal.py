@@ -118,11 +118,9 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     array proves the exact codes match DuckDB (same IEEE double
     arithmetic on both engines), and q_min/q_max pin the code range.
     Dequantize is mn + q*scale with max error scale/2 per dim."""
-    from ..operators.dedup import _spread
-
     emb = load_table(spark, sf_dir, "embeddings")
     v = "cast(embedding as array<double>)"
-    mm = _spread(emb).select(
+    mm = spread(emb).select(
         "vec_id",
         F.expr(f"{v}").alias("v"),
         F.expr(f"array_min({v})").alias("mn"),
@@ -592,7 +590,7 @@ def q_embedding_nn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.similarity import dot_expr, lsh_bucket_expr, norm_expr
 
-    emb = _spread(load_table(spark, sf_dir, "embeddings")).select(
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
         "embedding",
         lsh_bucket_expr("embedding", _nn_dedup_planes()).alias("bucket"),

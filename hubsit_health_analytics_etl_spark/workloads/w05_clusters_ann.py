@@ -189,7 +189,7 @@ def q_corpus_scrub_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("keep") == 1)
         .select("doc_id")
     )
-    kept = _spread(docs).join(keepers, "doc_id")
+    kept = spread(docs).join(keepers, "doc_id")
     return scrub_duplicate_spans(kept, k=SPAN_GRAM)
 
 

@@ -175,7 +175,7 @@ def q_document_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textanalysis import chunk_tokens
 
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     exploded = docs.select(
         "doc_id", F.explode(chunk_tokens("text", CHUNK_SIZE, CHUNK_STRIDE)).alias("c")
     ).filter(F.col("c.chunk") != "")
@@ -203,7 +203,7 @@ def q_document_chunks_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, text) BEFORE the Python boundary."""
     from ..operators.textanalysis import chunk_docs_udtf
 
-    docs = _spread(load_table(spark, sf_dir, "documents")).select(
+    docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "text"
     )
     return chunk_docs_udtf(CHUNK_SIZE, CHUNK_STRIDE)(docs.asTable())
@@ -250,7 +250,7 @@ def q_token_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.textanalysis import token_count_bpe_ish
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     t = docs.select(
         "doc_id",
         (F.col("doc_id") % PACK_SHARDS).alias("shard"),
@@ -412,7 +412,7 @@ def q_semantic_dedup_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture scale the bucket column still drives the equi-join, so
     # correctness and the never-re-bucketed contract are identical.
     write_parquet(
-        _spread(corpus).select(
+        spread(corpus).select(
             "vec_id",
             "embedding",
             norm_expr("embedding").alias("nrm"),

@@ -481,7 +481,7 @@ def q_embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     codebooks = pq_codebooks_label_mean(emb)
     codes, mse = pq_encode_exprs(codebooks)
-    return _spread(emb).select(
+    return spread(emb).select(
         "vec_id",
         F.concat_ws("-", F.transform(codes, lambda c: c.cast("string"))).alias(
             "codes"
@@ -533,7 +533,7 @@ def q_ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     codebooks = pq_codebooks_label_mean(emb)
     codes, _ = pq_encode_exprs(codebooks)
-    corpus_codes = _spread(emb).select("vec_id", codes.alias("codes"))
+    corpus_codes = spread(emb).select("vec_id", codes.alias("codes"))
     q = emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
@@ -597,7 +597,7 @@ def q_corpus_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
     spaces dropped)."""
     from pyspark.sql import Window
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("token")
     ).filter(F.col("token") != "")

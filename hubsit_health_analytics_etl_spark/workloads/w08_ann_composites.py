@@ -294,7 +294,7 @@ def q_ann_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cb = pq_codebooks_kmeans(emb, k=PQ_TRAINED_K)
     codes, mse = pq_encode_exprs(cb)
-    corpus_codes = _spread(emb).select(
+    corpus_codes = spread(emb).select(
         "vec_id", codes.alias("codes"), mse.alias("mse")
     )
     q = emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT).select(
@@ -316,7 +316,7 @@ def q_ann_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= ANN_K)
         .select("query_id", "neighbor_id")
     )
-    c = _spread(emb).select(
+    c = spread(emb).select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     l2 = F.expr(
@@ -395,7 +395,7 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import hash_bucket
     from ..operators.similarity import dot_expr, lsh_bucket_expr, norm_expr
 
-    emb = _spread(load_table(spark, sf_dir, "embeddings")).select(
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
         "embedding",
         lsh_bucket_expr("embedding", _nn_dedup_planes()).alias("bucket"),

@@ -177,7 +177,7 @@ def q_doc_quality_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quality_model import logit_expr, quality_feature_frame
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = quality_feature_frame(_spread(docs))
+    feats = quality_feature_frame(spread(docs))
     z = logit_expr(QUALITY_LOGIT_W, QUALITY_LOGIT_B)
     return feats.select(
         "doc_id",
@@ -243,7 +243,7 @@ def q_doc_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quality_model import logit_expr
     from ..operators.textanalysis import quality_features, quality_score
 
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"))
     f = quality_features("text")
     base = d.select(
         f["stopword_ratio"].cast("double").alias("swr"),
@@ -307,7 +307,7 @@ def q_doc_quality_trained_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import hash_bucket
     from ..operators.textanalysis import quality_score
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     feats = quality_feature_frame(docs).join(
         docs.select(
             "doc_id",
@@ -416,7 +416,7 @@ def q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textanalysis import annotate_documents, contamination_report
 
     docs = load_table(spark, sf_dir, "documents")
-    ann = annotate_documents(_spread(docs))
+    ann = annotate_documents(spread(docs))
     is_bench = hash_bucket("doc_id", salt="eval") < DECON_EVAL_PCT
     contam = (
         contamination_report(
@@ -728,7 +728,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-limited rows exactly like corpus_vocabulary."""
     from pyspark.sql import Window
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id",
         F.filter(F.split(F.lower("text"), " "), lambda x: x != "").alias("toks"),
@@ -832,7 +832,7 @@ def _bpe_merges_for(spark: SparkSession, sf_dir: str) -> list:
         from ..operators.textanalysis import bpe_train_merges
 
         docs = load_table(spark, sf_dir, "documents")
-        got = bpe_train_merges(_spread(docs), BPE_MERGES)
+        got = bpe_train_merges(spread(docs), BPE_MERGES)
         _BPE_MERGE_CACHE[sf_dir] = got
     return got
 
@@ -900,7 +900,7 @@ def q_bpe_symbol_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merges = _bpe_merges_for(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    final = bpe_apply_merges(bpe_seq_table(bpe_word_table(_spread(docs))), merges)
+    final = bpe_apply_merges(bpe_seq_table(bpe_word_table(spread(docs))), merges)
     sym = final.select(
         "n",
         F.explode(F.expr("filter(split(seq, char(1)), x -> x <> '')")).alias(
@@ -946,7 +946,7 @@ def q_bpe_doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merges = _bpe_merges_for(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    wf = bpe_word_table(_spread(docs))
+    wf = bpe_word_table(spread(docs))
     seq = F.concat(
         F.lit(BPE_SEP),
         F.concat_ws(BPE_SEP + BPE_SEP, F.split(F.col("word"), "")),

@@ -194,7 +194,7 @@ def _llm_dataset_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _branch_scrubbed():
         # 1-4: the curation decision (shared rules with
         # q_corpus_curation_pipeline, reduced to the selected set)
-        ann = annotate_documents(_spread(docs))
+        ann = annotate_documents(spread(docs))
         is_bench = hash_bucket("doc_id", salt="eval") < DECON_EVAL_PCT
         contam = (
             contamination_report(
@@ -242,7 +242,7 @@ def _llm_dataset_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # session checkpoint directory this lands on durable storage
         # (SCALING.md "Iterative jobs").
         return scrub_duplicate_spans(
-            _spread(docs).join(sel, "doc_id"), k=SPAN_GRAM
+            spread(docs).join(sel, "doc_id"), k=SPAN_GRAM
         ).transform(materialize, eager=True)
 
     # 6: trained-tokenizer counts of the scrubbed text (frozen merges,
@@ -253,7 +253,7 @@ def _llm_dataset_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrubbed, merges = run_concurrent(
         _branch_scrubbed, lambda: _bpe_merges_for(spark, sf_dir)
     )
-    wf = bpe_word_table(_spread(docs))
+    wf = bpe_word_table(spread(docs))
     seq = F.concat(
         F.lit(BPE_SEP),
         F.concat_ws(BPE_SEP + BPE_SEP, F.split(F.col("word"), "")),

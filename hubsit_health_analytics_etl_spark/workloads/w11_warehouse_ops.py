@@ -314,7 +314,7 @@ def q_vocab_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _run_scoped_index_dir("vocab")
     idx_path = os.path.join(base, "vocab_index")
-    write_parquet(_token_counts(_spread(corpus)), idx_path)
+    write_parquet(_token_counts(spread(corpus)), idx_path)
     idx = spark.read.parquet(idx_path)
 
     merged = (
@@ -379,7 +379,7 @@ def q_vocab_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _run_scoped_index_dir("vocab_forget")
     idx_path = os.path.join(base, "vocab_index")
-    write_parquet(_token_counts(_spread(docs)), idx_path)
+    write_parquet(_token_counts(spread(docs)), idx_path)
     idx = spark.read.parquet(idx_path)
 
     neg = _token_counts(docs.filter(is_del)).select(
@@ -565,7 +565,7 @@ def q_doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles; ranking is on the integer micro-units."""
     from pyspark.sql import Window
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("token")
     ).filter(F.col("token") != "")

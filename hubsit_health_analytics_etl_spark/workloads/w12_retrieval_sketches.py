@@ -184,12 +184,11 @@ def _prepare_bucketed_join(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         return got
     import hashlib
     import os
-    import tempfile
 
     from ..sources.sinks import write_bucketed_table
 
     tag = hashlib.md5(f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:10]
-    base = tempfile.mkdtemp(prefix=f"hubsit_bucketed_{tag}_")
+    base = _run_scoped_index_dir(f"bucketed_{tag}")
     t_orders, t_cust = f"orders_bkt_{tag}", f"customer_bkt_{tag}"
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
@@ -544,7 +543,7 @@ def _rot_pq_topk(
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    rot = _spread(emb).select(
+    rot = spread(emb).select(
         "vec_id", "label", project_u6_expr(components, "embedding").alias("rot")
     )
     cb = pq_codebooks_floor_u6(rot, vec_col="rot")
@@ -918,7 +917,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs."""
     from ..operators.textanalysis import bm25_scores
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     return _bm25_ranked(bm25_scores(docs, _bm25_qterms(spark)))
 
 
@@ -935,16 +934,13 @@ def _prepare_term_index(spark: SparkSession, sf_dir: str) -> str:
     got = _TERM_INDEX_CACHE.get(sf_dir)
     if got is not None:
         return got
-    import hashlib
     import os
-    import tempfile
 
     from ..operators.textanalysis import corpus_term_stats
     from ..sources.sinks import write_parquet
 
-    tag = hashlib.md5(f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:10]
-    base = tempfile.mkdtemp(prefix=f"hubsit_term_index_{tag}_")
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    base = _run_scoped_index_dir("term_index")
+    docs = spread(load_table(spark, sf_dir, "documents"))
     tf, dl, dfreq, stats = corpus_term_stats(docs)
     # "raw" = the EXACT-INTEGER corpus totals behind stats' derived
     # doubles — the mergeable/subtractable form bm25_forget needs
@@ -1167,7 +1163,7 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import dot_expr, norm_expr
     from ..operators.textanalysis import bm25_scores, corpus_term_stats, rrf_fuse
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
 
     # ONE corpus pass (explode → tf) shared by MLT term selection and
     # the BM25 scoring below — dl/df/avgdl derive from tf
@@ -1214,7 +1210,7 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexr = _hybrid_two_phase_topk(lex, "s_u6", "lex_rk")
 
     # (b) semantic: broadcast query vectors, map-side cosine
-    emb = _spread(load_table(spark, sf_dir, "embeddings")).select(
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding", norm_expr("embedding").alias("nrm")
     )
     qv = emb.filter(F.col("vec_id").isin(HYBRID_QUERY_DOCS)).select(
@@ -1292,16 +1288,13 @@ def _prepare_embedding_norm_index(spark: SparkSession, sf_dir: str) -> str:
     got = _EMB_NORM_INDEX_CACHE.get(sf_dir)
     if got is not None:
         return got
-    import hashlib
     import os
-    import tempfile
 
     from ..operators.similarity import norm_expr
     from ..sources.sinks import write_parquet
 
-    tag = hashlib.md5(f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:10]
-    base = tempfile.mkdtemp(prefix=f"hubsit_emb_norm_{tag}_")
-    emb = _spread(load_table(spark, sf_dir, "embeddings")).select(
+    base = _run_scoped_index_dir("emb_norm")
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding", norm_expr("embedding").alias("nrm")
     )
     write_parquet(emb, os.path.join(base, "norms"))
@@ -1524,7 +1517,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     shorter than the phrase emit nothing on both engines."""
     from ..operators.textanalysis import _doc_grams
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     grams = _doc_grams(docs, PHRASE_LEN)
     phrases = spark.createDataFrame(
         PHRASE_SET, "phrase_id string, phrase string"
@@ -1566,7 +1559,7 @@ def q_bm25_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _raw_parts(slice_docs, materialize=False):
         tf, dl, dfreq, _stats = corpus_term_stats(
-            _spread(slice_docs), materialize=materialize
+            spread(slice_docs), materialize=materialize
         )
         raw = slice_docs.agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs")

@@ -105,16 +105,13 @@ def _prepare_postings_index(spark: SparkSession, sf_dir: str) -> str:
     got = _POSTINGS_INDEX_CACHE.get(sf_dir)
     if got is not None:
         return got
-    import hashlib
     import os
-    import tempfile
 
     from ..operators.textanalysis import _doc_grams
     from ..sources.sinks import write_parquet
 
-    tag = hashlib.md5(f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:10]
-    base = tempfile.mkdtemp(prefix=f"hubsit_postings_index_{tag}_")
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    base = _run_scoped_index_dir("postings_index")
+    docs = spread(load_table(spark, sf_dir, "documents"))
     write_parquet(
         _doc_grams(docs, SPAN_GRAM), os.path.join(base, "postings")
     )
@@ -202,15 +199,12 @@ def _prepare_cms_grid(spark: SparkSession, sf_dir: str) -> str:
     got = _CMS_GRID_CACHE.get(sf_dir)
     if got is not None:
         return got
-    import hashlib
     import os
-    import tempfile
 
     from ..operators.sketches import cms_counters
     from ..sources.sinks import write_parquet
 
-    tag = hashlib.md5(f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:10]
-    base = tempfile.mkdtemp(prefix=f"hubsit_cms_grid_{tag}_")
+    base = _run_scoped_index_dir("cms_grid")
     events = load_table(spark, sf_dir, "events").select("user_id")
     write_parquet(cms_counters(events, "user_id"), os.path.join(base, "grid"))
     _CMS_GRID_CACHE[sf_dir] = base
@@ -410,7 +404,7 @@ def q_doc_unigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm_docs = docs.filter(
         hash_bucket("doc_id", salt="lm") >= LM_TRAIN_PCT
     )
-    s = unigram_logprob_scores(_spread(docs), lm_docs)
+    s = unigram_logprob_scores(spread(docs), lm_docs)
     avg_u6 = F.floor(
         ((-F.col("sum_logp")) / F.col("n_tokens")) * F.lit(1000000.0)
     ).cast("bigint")
@@ -767,7 +761,7 @@ def q_token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Global top-k is TakeOrderedAndProject via reshape.top_k."""
     from ..operators.reshape import top_k
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.expr("split(lower(text), ' ')").alias("toks")
     )

@@ -163,7 +163,7 @@ def q_dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     target = docs.filter(F.col("n_chars") >= DSIR_TGT_MIN_CHARS)
-    s = dsir_logweights(_spread(docs), target)
+    s = dsir_logweights(spread(docs), target)
     logw_u6 = F.floor(F.col("logw") * F.lit(1000000.0)).cast("bigint")
     scored = s.select(
         "doc_id",

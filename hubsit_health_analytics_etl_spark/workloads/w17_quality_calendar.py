@@ -198,7 +198,7 @@ def q_corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy is {ZIPF_TOP_R} rows."""
     from pyspark.sql import Window
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     counts = (
         docs.select(F.explode(F.split(F.lower("text"), " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -727,7 +727,7 @@ def q_pack_utilization_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.textanalysis import token_count_bpe_ish
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     t = docs.select(
         "doc_id",
         (F.col("doc_id") % PACK_SHARDS).alias("shard"),
@@ -800,7 +800,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     integral micro-unit divisions. One scan, |langs| output rows."""
     from ..operators.textanalysis import token_count_bpe_ish
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     d = docs.select(
         "lang",
         token_count_bpe_ish("text").cast("bigint").alias("n_sub"),
@@ -864,7 +864,7 @@ def q_doc_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a standing index maintained additively like BM25 terms."""
     from ..operators.dedup import shingles_from_text
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     g = docs.select(
         "doc_id", F.explode(shingles_from_text("text", 3)).alias("gram")
     ).transform(materialize)

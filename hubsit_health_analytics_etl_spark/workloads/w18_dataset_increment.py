@@ -152,11 +152,9 @@ def _scrub_splice(spark, docs, paths, sel_old, sel_new, arts=None, delta=None):
     # grams whose posting set changes: added docs' grams + removed
     # docs' standing postings (one broadcast-probed postings scan).
     # The added-docs frame is BATCH-BOUNDED by the splice contract, so
-    # it spreads with an unconditional hash repartition instead of
-    # _spread's partition-count probe — df.rdd on a join-shaped frame
-    # costs ~1 s of driver-side physical planning (measured), paid
-    # inside every splice body; the keyed exchange of a batch-sized
-    # frame is cheap at any scale and coalescing-exempt (guide §2.5)
+    # it spreads with an unconditional hash repartition: the keyed
+    # exchange of a batch-sized frame is cheap at any scale and
+    # coalescing-exempt (guide §2.5)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     add_grams = _doc_grams(
         docs.join(bc(added), "doc_id").repartition(n_part, "doc_id"),
@@ -474,7 +472,7 @@ def _commit_standing_tables(
     paths: dict[str, str] = {}
 
     # per-doc annotations (stage-1 record)
-    write_parquet(annotate_documents(_spread(standing)), "ann")
+    write_parquet(annotate_documents(spread(standing)), "ann")
     ann = spark.read.parquet(paths["ann"])
 
     # exact-dedup index + rep-level MinHash signature index. The LSH
@@ -567,7 +565,7 @@ def _commit_standing_tables(
     write_parquet(sel, "sel")
     sel = spark.read.parquet(paths["sel"])
     sel_docs = standing.join(sel, "doc_id")
-    spost = _doc_grams(_spread(sel_docs), SPAN_GRAM)
+    spost = _doc_grams(spread(sel_docs), SPAN_GRAM)
     write_parquet(spost, "scrub_postings")
     spost = spark.read.parquet(paths["scrub_postings"])
     owners = (
@@ -588,7 +586,7 @@ def _commit_standing_tables(
     write_parquet(_scrub_wordcounts(scr), "dwc")
 
     # raw word-frequency table (the BPE trainer's sufficient statistic)
-    write_parquet(bpe_word_table(_spread(standing)), "rwf")
+    write_parquet(bpe_word_table(spread(standing)), "rwf")
 
     return versions, paths
 
@@ -685,7 +683,7 @@ def q_llm_dataset_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 8a. tokenizer retrain from merged word counts
         rwf_union = (
             rd(paths["rwf"])
-            .unionByName(bpe_word_table(_spread(batch)))
+            .unionByName(bpe_word_table(spread(batch)))
             .groupBy("word")
             .agg(F.sum("n").alias("n"))
             .transform(materialize)
@@ -778,7 +776,7 @@ def _splice_selection(spark, docs, paths, batch, arts=None, delta=None):
     batch_rep = fp_new.groupBy("fp").agg(F.min("doc_id").alias("batch_rep"))
     is_eval = hash_bucket("doc_id", salt="eval") < DECON_EVAL_PCT
     ann_batch, fx, cg_b, bgp_b = ckpt_wave(
-        annotate_documents(_spread(batch)),
+        annotate_documents(spread(batch)),
         fp_new.join(batch_rep, "fp").join(bc(idx_hits), "fp", "left"),
         decon_grams(batch.filter(~is_eval), DECON_K),
         decon_grams(batch.filter(is_eval), DECON_K)
@@ -1442,7 +1440,7 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         rwf_new = (
             rd(paths["rwf"])
             .unionByName(
-                bpe_word_table(_spread(deleted)).select(
+                bpe_word_table(spread(deleted)).select(
                     "word", (-F.col("n")).alias("n")
                 )
             )

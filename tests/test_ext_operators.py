@@ -670,19 +670,50 @@ def test_lsh_ivf_broadcast_guard_drops_hint_when_tripped(spark):
     assert rows(small) == rows(big)
 
 
-def test_spread_is_identity_on_wide_inputs(spark):
-    """_spread must NOT shuffle an input that already has enough
-    splits: at 100 TB the scan arrives with thousands of partitions
-    and a blanket repartition would re-shuffle the whole corpus."""
-    from hubsit_health_analytics_etl_spark.operators.dedup import _spread
-    from hubsit_health_analytics_etl_spark.sources.parquet import load_table
+def test_spread_decides_from_row_groups(spark, tmp_path):
+    """``spread`` fans out only an input whose parquet files hold fewer
+    than shuffle-partitions row groups, and decides from file metadata
+    alone: at 100 TB the scan has thousands of row groups and a blanket
+    repartition would re-shuffle the whole corpus, and the decision
+    must launch no Spark job even on a join-shaped frame."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hubsit_health_analytics_etl_spark.sources.parquet import (
+        load_table,
+        spread,
+    )
 
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # one file holding n row groups: passes through, not even a new node
+    wide_path = str(tmp_path / "wide.parquet")
+    pq.write_table(pa.table({"k": list(range(4 * n))}), wide_path, row_group_size=4)
+    assert pq.read_metadata(wide_path).num_row_groups == n
+    wide = spark.read.parquet(wide_path)
+    assert spread(wide) is wide
+
+    # the one-row-group fixture gains the round-robin fan-out
     docs = load_table(spark, SF_SMOKE, "documents")
-    wide = docs.repartition(n)
-    assert _spread(wide) is wide  # no-op, not even a new plan node
-    narrow = docs.coalesce(1)
-    assert _spread(narrow).rdd.getNumPartitions() == n
+    plan = spread(docs)._jdf.queryExecution().executedPlan().toString()
+    assert f"RoundRobinPartitioning({n})" in plan, plan
+
+    # no file input: nothing to decide from, returned as is
+    mem = spark.createDataFrame([(1,)], "k int")
+    assert spread(mem) is mem
+
+    # join-shaped input: no job (a partition probe would run the
+    # broadcast), and its two one-row-group files still fan out
+    emb = load_table(spark, SF_SMOKE, "embeddings").select(
+        F.col("vec_id").alias("doc_id")
+    )
+    joined = docs.join(F.broadcast(emb), "doc_id")
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    fanned = spread(joined)
+    assert set(sc.statusTracker().getJobIdsForGroup()) - before == set()
+    plan = fanned._jdf.queryExecution().executedPlan().toString()
+    assert f"RoundRobinPartitioning({n})" in plan, plan
 
 
 def test_repetition_fraction_flags_looping_text(spark):
@@ -966,7 +997,7 @@ def test_pq_beats_trivial_quantizer_and_chance_recall(spark):
 
 def test_pq_encode_is_map_only(spark):
     """The PQ encode must run inside the scan stage (literal codebooks,
-    zero shuffles) — the only allowed exchange is _spread's round-robin
+    zero shuffles) — the only allowed exchange is spread's round-robin
     fan-out."""
     from hubsit_health_analytics_etl_spark import workload as w
     from hubsit_health_analytics_etl_spark.plans.explain import physical_plan

@@ -175,7 +175,7 @@ def test_ann_bruteforce_corpus_never_shuffles(spark):
     assert "BroadcastNestedLoopJoin" in p  # the documented, chosen shape
     # every Exchange in the plan feeds either the broadcast (query side)
     # or the post-join top-k — none may be a corpus repartition between
-    # scan and join. The corpus enters via _spread (round-robin), so
+    # scan and join. The corpus enters via spread (round-robin), so
     # the join's streaming child must be that RoundRobin exchange
     # directly, with no hash partitioning of the corpus.
     streaming_side = p.split("BroadcastNestedLoopJoin")[0]
@@ -266,7 +266,7 @@ def test_corpus_keep_list_is_map_only(spark):
 
     p = physical_plan(_q("corpus_keep_list")(spark, SF_SMOKE))
     body = p.split("== Physical Plan ==")[-1]
-    # _spread's round-robin fan-out is the only allowed exchange
+    # spread's round-robin fan-out is the only allowed exchange
     n_ex = body.count("Exchange") 
     n_rr = body.count("REPARTITION_BY_NUM") + body.lower().count("roundrobin")
     assert n_ex <= n_rr, p
@@ -275,7 +275,7 @@ def test_corpus_keep_list_is_map_only(spark):
 def test_corpus_composition_single_shuffle(spark):
     from hubsit_health_analytics_etl_spark.plans.explain import count_exchanges
 
-    # one aggregate exchange (+1 allowed for _spread's round-robin)
+    # one aggregate exchange (+1 allowed for spread's round-robin)
     assert count_exchanges(_q("corpus_composition")(spark, SF_SMOKE)) <= 2
 
 
@@ -470,7 +470,7 @@ def test_kmeans_cells_derive_from_corpus_size(spark):
 @pytest.mark.parametrize("name", ["doc_repetition", "pii_scrub"])
 def test_curation_filters_are_map_only(spark, name):
     """Repetition + PII scrub must run inside the scan stage: the only
-    allowed exchange is _spread's round-robin fan-out."""
+    allowed exchange is spread's round-robin fan-out."""
     from hubsit_health_analytics_etl_spark.plans.explain import physical_plan
 
     p = physical_plan(_q(name)(spark, SF_SMOKE))
@@ -519,7 +519,7 @@ def test_dormant_rich_customers_anti_join_and_date_pushdown(spark):
 
 def test_embedding_quantize_map_only_and_pack_single_shuffle(spark):
     """Quantization must run inside the scan stage (no exchange beyond
-    _spread's fan-out); packing shuffles ONCE on the shard key for its
+    spread's fan-out); packing shuffles ONCE on the shard key for its
     windowed cumsum — never a global total order."""
     from hubsit_health_analytics_etl_spark.plans.explain import physical_plan
 
@@ -850,9 +850,10 @@ def test_scrub_duplicate_spans_never_pairwise_text_never_shuffled(spark):
     contract, JVM-only; and the text column itself must never ride a
     KEYED shuffle — every hash-partitioned Exchange moves only
     (doc_id, pos/gh/tp) keys, the token rebuild is map-side after the
-    cut-set join. (_spread's RoundRobin fixture-parallelism
+    cut-set join. (spread's RoundRobin fixture-parallelism
     repartition of the raw scan is exempt — it is not a keyed
-    data-movement stage and disappears on real multi-file input.)"""
+    data-movement stage and disappears on real input with at least
+    shuffle-partitions row groups.)"""
     from hubsit_health_analytics_etl_spark.plans.explain import physical_plan
 
     p = physical_plan(_q("scrub_duplicate_spans")(spark, SF_SMOKE))

@@ -26,7 +26,7 @@ def test_doc_quality_logit_scoring_is_map_only(spark):
 
     df = QUERIES["doc_quality_logit"](spark, "/root/testdata/sf0.001")
     p = df._jdf.queryExecution().executedPlan().toString()
-    # _spread()'s RoundRobin fan-out of the single tiny fixture file is
+    # spread()'s RoundRobin fan-out of the single tiny fixture file is
     # allowed — it is data-independent; what must NOT appear is a keyed
     # shuffle, a join, or a Python stage
     for bad in ("hashpartitioning", "Join", "BatchEvalPython", "ArrowEvalPython"):

@@ -1,14 +1,18 @@
 """Source-level lint gates over the package: no dev-box partition-count
 literals in query bodies (VERDICT r13 #6) — cluster fan-out comes from
 defaultParallelism/AQE, and deliberate file-count scenarios carry an
-explicit '# lint: fixture-files' justification marker; and every
-checkpoint goes through the one ``materialize`` primitive."""
+explicit '# lint: fixture-files' justification marker; every
+checkpoint goes through the one ``materialize`` primitive; no code
+reaches for ``df.rdd``; and every temporary directory comes from the
+one run-scoped helper."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import os
+import subprocess
+import sys
 
 from hubsit_health_analytics_etl_spark.plans.lint import (
     Finding,
@@ -68,10 +72,9 @@ def test_lint_rule_fires_on_literal_and_respects_marker() -> None:
     assert lint_source_fixture_constants("# df.repartition(32)\n") == []
 
 
-def test_checkpoints_only_inside_materialize() -> None:
-    """``operators/concurrency.py::materialize`` is the package's only
-    ``localCheckpoint``/``checkpoint`` call, so the session's
-    local-vs-reliable policy reaches every materialization."""
+def _package_sites(hit) -> list[str]:
+    """``file::function`` of every AST node in the package for which
+    ``hit(node)`` is true."""
     sites: list[str] = []
     for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
         with open(path) as f:
@@ -85,9 +88,67 @@ def test_checkpoints_only_inside_materialize() -> None:
         sites += [
             f"{os.path.relpath(path, PKG)}::{owner.get(node)}"
             for node in ast.walk(tree)
-            if isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr in ("localCheckpoint", "checkpoint")
+            if hit(node)
         ]
+    return sites
+
+
+def _calls(*names: str):
+    return lambda node: isinstance(node, ast.Call) and (
+        getattr(node.func, "attr", None) in names
+        or getattr(node.func, "id", None) in names
+    )
+
+
+def test_checkpoints_only_inside_materialize() -> None:
+    """``operators/concurrency.py::materialize`` is the package's only
+    ``localCheckpoint``/``checkpoint`` call, so the session's
+    local-vs-reliable policy reaches every materialization."""
+    sites = _package_sites(_calls("localCheckpoint", "checkpoint"))
     # one reliable and one local branch
     assert sites == ["operators/concurrency.py::materialize"] * 2, sites
+
+
+def test_no_rdd_partition_probes() -> None:
+    """No ``.rdd`` access anywhere in the package: ``df.rdd`` physically
+    plans the frame and, under AQE, runs its exchanges as hidden jobs.
+    Spread decisions read source metadata (``sources/parquet.py::spread``)."""
+    sites = _package_sites(
+        lambda node: isinstance(node, ast.Attribute) and node.attr == "rdd"
+    )
+    assert sites == [], sites
+
+
+def test_temp_dirs_only_from_the_run_root() -> None:
+    """Every temporary directory the package makes lives under the one
+    process-scoped root that ``workloads/w02_dedup.py`` removes at
+    exit: ``mkdtemp`` is called only by the root and the run-scoped
+    index-dir helper."""
+    sites = _package_sites(_calls("mkdtemp", "mkstemp", "TemporaryDirectory"))
+    assert sorted(sites) == [
+        "workloads/w02_dedup.py::_run_root",
+        "workloads/w02_dedup.py::_run_scoped_index_dir",
+    ], sites
+
+
+def test_run_scoped_dirs_removed_at_exit(tmp_path) -> None:
+    """A process that makes run-scoped index directories (and writes
+    into them) leaves nothing in the temp directory once it exits."""
+    code = (
+        "from hubsit_health_analytics_etl_spark.workloads.w02_dedup import "
+        "_run_scoped_index_dir as d\n"
+        "a, b = d('probe'), d('probe')\n"
+        "assert a != b\n"
+        "open(a + '/part-0.parquet', 'w').write('x')\n"
+        "print(a)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(PKG),
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert out.startswith(str(tmp_path)), out
+    assert list(tmp_path.iterdir()) == []
